@@ -1,88 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** The session Bench times under (Verify checks under the same). */
+  def session(sfDir: String): SparkSession = Session.build(sfDir, Session.cpus(4))
+
+  /** Min-of-`runs` wall time of building `query` and writing it to the
+    * noop sink, or the first error a run threw — a query that throws
+    * never gets a time. The noop sink forces full evaluation of every
+    * output column (a count() would let Catalyst prune the projections
+    * being measured). */
+  def time(runs: Int)(query: () => DataFrame): Either[Throwable, Double] =
+    try Right((1 to runs).map { _ =>
+      val t0 = System.nanoTime()
+      query().write.mode("overwrite").format("noop").save()
+      (System.nanoTime() - t0) / 1e9
+    }.min)
+    catch { case e: Throwable => Left(e) }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle-partition sizing: at sf10 (100 M events / 5 M documents)
-    // the cpus-count default leaves >3 M rows per shuffle partition and
-    // the wide dedup aggregations spill — partitions must track DATA
-    // VOLUME, not core count. r8 set a flat AQE initialPartitionNum=512
-    // and let coalescing shrink it, but that taxed every multi-shuffle
-    // sf0.1 query ~1.35× (judge's paired A/B: q72 1.55×, q41 1.33×,
-    // q89 1.28× at 512 vs 32 — AQE coalescing does NOT recover the
-    // 512-task launch/coalesce overhead when map output is tiny). r9:
-    // derive the initial count from the INPUT volume instead — one
-    // initial partition per 4 MiB of on-disk parquet, clamped to
-    // [cpus, 512]. 4 MiB of compressed columnar input ≈ the 64 MiB AQE
-    // advisory partition size at the ~16× decompress+explode expansion
-    // of the widest shuffles here (shingle posting lists), so AQE only
-    // ever coalesces DOWN from this start, never needs more. Resulting
-    // defaults: sf0.1 (17 MB) → 32 = cpus (r7-equivalent config, no
-    // small-scale tax), sf1 (154 MB) → 38, sf10 (1.5 GB) → 369
-    // (measured r8: q27 93.7 s @32 static, 61.9 s @≥256). The static
-    // spark.sql.shuffle.partitions stays at core count: it is what the
-    // non-AQE paths (stateful streaming disables AQE) fall back to.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    def dirBytes(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles).map(_.map(dirBytes).sum).getOrElse(0L)
-    val autoInitialParts = math.min(512L,
-      math.max(cpus.toLong, dirBytes(new java.io.File(sfDir)) / (4L << 20)))
-    val initialParts =
-      sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTS", autoInitialParts.toString)
-    // Scan-side split sizing (r12): the MakeScale corpora are ONE
-    // heavily-compressed file per table (events sf1 = 15.7 MB for 1 M
-    // rows), so the stock 128 MiB maxPartitionBytes put every fact scan
-    // in a single task — 1 core parsing while 31 idle (q76's whole
-    // residual). Size splits from the corpus volume instead: aim at
-    // ~4 tasks per core over the whole directory, floored at 1 MiB
-    // (= MakeScale's row-group size — smaller splits can't win: a split
-    // without a row-group midpoint does no work) and capped at the
-    // 128 MiB default for big corpora.
-    val autoMaxPart = math.min(128L << 20,
-      math.max(1L << 20, dirBytes(new java.io.File(sfDir)) / (4 * cpus.toLong)))
-    val maxPartBytes =
-      sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", autoMaxPart.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialParts)
-      // collect_list/collect_set aggregations (posting lists, RRD spans,
-      // JSON series) hold millions of distinct keys per partition; the
-      // stock 128-key ObjectHashAggregate fallback degrades every one of
-      // them to sort-based aggregation (measured: q26's posting agg
-      // -20 s at sf10 with the raised threshold). Memory caveat for
-      // deploys: the MAP-SIDE partial aggregate's hash map is bounded by
-      // this threshold itself, not by AQE's advisory size (which only
-      // bounds reduce-side partition input), so per-task map-side memory
-      // grows with the threshold on large input splits — a smaller-heap
-      // box should lower SPARK_GRAFT_OBJ_AGG_FALLBACK accordingly.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "262144"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Size-based (NOT forced) broadcast ceiling sized for the deploy
-      // box (128 GiB): mid-size build sides (the shingle inverted index
-      // at bench SF) broadcast deterministically instead of AQE flapping
-      // between SMJ and BHJ run-to-run; oversized sides still shuffle.
-      // overridable for scale A/B runs (e.g. "-1" forces shuffle joins
-      // to test whether an AQE broadcast→SMJ runtime transition is what
-      // a query pays at the next decade)
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"))
-      .config("spark.sql.files.maxPartitionBytes", maxPartBytes)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // one optimizer config for every query (q54 relies on the rule;
-    // registering here keeps plans consistent across the whole run)
-    spark.experimental.extraOptimizations = Seq(graft.plans.BandedIntervalJoinRule)
-    // JVM/codegen warmup outside the timings (standard practice: measure
-    // the engine, not first-call class loading). Runs the whole-stage
-    // codegen + shuffle machinery once on a small synthetic job.
-    spark.range(1000000).selectExpr("sum(id % 7)").collect()
-    spark.range(1000).toDF("id").groupBy("id").count().count()
+    val spark = session(sfDir)
+    Session.warmUp(spark)
     // Dev A/B support (driver contract unchanged — it passes no args):
     // optional args = query-name subset; SPARK_GRAFT_BENCH_RUNS = repeat
     // count (min-of-N). More repeats help isolate this host's multi-
@@ -101,7 +39,7 @@ object Bench {
       .filter(q => names.isEmpty || names.contains(q._1))
     // q76 fixture-render persistence (VERDICT r9 item 3): ~1/3 of the
     // q76 artifact number was the bench manufacturing its own input JSON
-    // (DiagQ76 r9: render alone 2.4 s of 7.2 s at sf1), so the rendered
+    // (render alone 2.4 s of 7.2 s at sf1 in r9), so the rendered
     // lines are written ONCE per bench run and the timed loop measures
     // the OPERATOR (parse → resolve → argmax) reading them back. The
     // render cost is reported separately in the JSON. The q76 oracle
@@ -120,31 +58,28 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     val results = selected.map { case (name, fn) =>
-      // Steady-state timing: min of two runs per query (this host's CPU
-      // is bursty — identical back-to-back totals vary ±60% — and the
-      // JIT compiles each query's codegen on first execution). noop sink
-      // forces full evaluation of every output column (a count() would
-      // let Catalyst prune the projections being measured).
-      val timed: () => org.apache.spark.sql.DataFrame =
+      name -> time(runs) {
         if (name == "q76_ttn_envelope") { () =>
           SparkEntry.q76Pipeline(spark.read.parquet(q76Path.get))
         } else { () => fn(spark, sfDir) }
-      val times = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        try timed().write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => }
-        (System.nanoTime() - t0) / 1e9
       }
-      name -> times.min
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+    val timed = results.collect { case (name, Right(t)) => name -> t }
+    val failed = results.collect { case (name, Left(e)) =>
+      System.err.println(s"[bench] $name failed: $e")
+      name
+    }
+    val qs = timed.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val total = timed.map(_._2).sum
+    val method = s"min-of-$runs runs per query"
+    val failedField = failed.map("\"" + _ + "\"").mkString("\"failed\":[", ",", "]")
     val renderField = q76Render
       .map(r => s""","q76_fixture_render_sec":$r""").getOrElse("")
     // metric stays "total" — the driver selects the bench line by that
     // key (SKILL.md contract); the methodology rides in its own field.
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","method":"min-of-$runs runs per query"$renderField,"queries":$qs,"sf":"$sfDir"}"""
+    // Failed queries are listed and left out of the total.
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","method":"$method",$failedField$renderField,"queries":$qs,"sf":"$sfDir"}"""
     println(fullLine)
     // The full line is ~6 KB (113 per-query fields) and the driver's
     // bounded tail capture has truncated it mid-line for two rounds
@@ -158,6 +93,7 @@ object Bench {
     val w = new java.io.PrintWriter(queriesFile, "UTF-8")
     try w.println(fullLine) finally w.close()
     spark.stop()
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries_file":"$queriesFile","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","method":"$method",$failedField,"queries_file":"$queriesFile","sf":"$sfDir"}""")
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

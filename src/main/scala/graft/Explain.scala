@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspection utility: `runMain graft.Explain <sfDir> <query...>`
   * prints the formatted physical plan of each named query (all queries
@@ -11,23 +10,10 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same size-based broadcast ceiling as Bench (see Bench.scala) so
-      // the committed PLANS.txt shows the plans the bench actually runs;
-      // overridable to reproduce OTHER sessions' plans (e.g. the r9
-      // sf10 q91 diagnosis of a default-threshold 8 GiB broadcast)
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"))
-      .getOrCreate()
+    // Bench's session, so the committed PLANS.txt shows the plans the
+    // bench actually runs
+    val spark = Bench.session(sfDir)
     spark.sparkContext.setLogLevel("ERROR")
-    // one optimizer config for every query (q54 relies on the rule;
-    // registering here keeps plans consistent across the whole run)
-    spark.experimental.extraOptimizations = Seq(graft.plans.BandedIntervalJoinRule)
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
       .foreach { case (name, fn) =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Closed-form planted-pair adjudication of the scaled-corpus dedup
@@ -42,24 +42,7 @@ object PlantedCheck {
     val scaledDir = args(1)
     val mult = args(2).toInt
     val checks = { val c = args.drop(3).toSet; if (c.isEmpty) Set("q26", "q27", "q72") else c }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def dirBytes(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles).map(_.map(dirBytes).sum).getOrElse(0L)
-    val initialParts = math.min(512L, math.max(cpus.toLong,
-      dirBytes(new java.io.File(scaledDir)) / (4L << 20)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialParts)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "262144"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(scaledDir, Session.cpus(32))
     var failed = false
     def report(check: String, pass: Boolean, stats: (String, Any)*): Unit = {
       val s = stats.map { case (k, v) => s""""$k":$v""" }.mkString(",")

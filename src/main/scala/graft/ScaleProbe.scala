@@ -17,6 +17,13 @@ import org.apache.spark.sql.expressions.Window
   * mix / iterative BPE), instead of the events shapes.
   */
 object ScaleProbe {
+  /** Bench's session sized for `dir`, warmed up. */
+  private def session(dir: String): SparkSession = {
+    val s = Session.build(dir, Session.cpus(32))
+    Session.warmUp(s)
+    s
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val annMode = args.lift(2).contains("ann")
@@ -24,23 +31,16 @@ object ScaleProbe {
       if (annMode) Array(1)
       else args.lift(1).getOrElse("1,3,10").split(",").map(_.toInt)
     val dedupMode = args.lift(2).contains("dedup")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Long probe sessions run many heavyweight shuffles back to back;
-      // shuffle files are only deleted when the JVM garbage-collects the
-      // dereferenced ShuffleDependency (ContextCleaner), and with a big
-      // heap a GC may never happen — the 100× dedup point accumulated
-      // >79 GB of dead shuffle/spill files and died on disk while every
-      // op ran fine in isolation. Aggressive periodic GC keeps dead
-      // shuffles bounded to one op's footprint.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id % 7)").collect() // warmup
+    // Long probe sessions run many heavyweight shuffles back to back;
+    // shuffle files are only deleted when the JVM garbage-collects the
+    // dereferenced ShuffleDependency (ContextCleaner), and with a big
+    // heap a GC may never happen — the 100× dedup point accumulated
+    // >79 GB of dead shuffle/spill files and died on disk while every
+    // op ran fine in isolation. Aggressive periodic GC keeps dead
+    // shuffles bounded to one op's footprint. Set as a system property
+    // so every session below (Session.build) picks it up.
+    sys.props.getOrElseUpdate("spark.cleaner.periodicGC.interval", "30s")
+    val spark = session(sfDir)
 
     if (dedupMode) { probeDedup(spark, sfDir, mults); spark.stop(); return }
     if (annMode) { probeAnn(spark, sfDir); spark.stop(); return }
@@ -359,10 +359,10 @@ object ScaleProbe {
     * pair generation + distinct, or the exact-verify tail — each leg a
     * noop write of the pipeline PREFIX (stage expressions mirror
     * cosineNearDupPairsLsh verbatim; the `full` leg runs the real
-    * operator).
+    * operator). The rejected 1-exchange form's evidence is the plan
+    * dump plans/r14/q91_lsh_neardup_pairs_1ex_rejected.txt.
     * `runMain graft.ScaleProbe /tmp/graft_scale_emb_100x 1 lshstage` */
   private def probeLshStages(spark: SparkSession, dir: String): Unit = {
-    graft.plans.GraftExtensions.register(spark)
     val d = spark.read.parquet(dir)
     val n = d.count()
     val (p, bands) = operators.Similarity.lshPairKnobs(n, 0.9)
@@ -402,56 +402,16 @@ object ScaleProbe {
         call_function("hamming_pruned_pairs_flat", col("es"), lit(w),
           lit(hMax)).as(Seq("d1", "d2")))
       .distinct()
-    // r13-opt A/B legs: the boxed struct form the flat aggregate
-    // replaced (array_sort(collect_list(struct)) + struct-input
-    // generator), timed same-session so the attribution is host-tide-
-    // free. Same candidate SET by construction (PostingFlatSpec).
-    def postingStruct = entries.groupBy(col("band"), col("bucket"))
-      .agg(array_sort(collect_list(struct(col("id"), col("sk")))).as("es"))
-      .where(size(col("es")).between(2, 1000))
-    def candStruct = postingStruct.select(
-        call_function("hamming_pruned_pairs", col("es"), lit(hMax))
-          .as(Seq("d1", "d2")))
-      .distinct()
     leg("coding")(coded)
     leg("entries")(entries)
     leg("posting")(posting)
     leg("cand_pruned")(cand)
-    leg("posting_struct")(postingStruct)
-    leg("cand_struct")(candStruct)
     // pruned-survivor count — the row count the exact-verify tail pays a
     // vector fetch for (near-threshold pairs the sketch CANNOT drop:
     // they are genuinely close, the verify exists for exactly them)
     println(s"LSHSTAGE cand_rows    ${cand.count()}")
     leg("full")(operators.Similarity.cosineNearDupPairsLsh(
       d, col("id"), col("v"), 0.9, p, bands))
-    // r14 A/B (kept so the rejection stays reproducible): the REJECTED
-    // 1-exchange variant — repartition(d1) before the distinct merges
-    // the dedup exchange with the verify join's. Measured SLOWER than
-    // the shipped (d1, d2)-distinct form (×10 corpus, interleaved
-    // min-of-3: 1-exchange 3.18 s vs 2-exchange 2.79 s) — see
-    // Similarity.cosineNearDupPairsLsh for the post-mortem. NOTE:
-    // `full` runs the real (shipped) operator; this leg keeps the
-    // rejected form timeable in the same JVM.
-    def full1ex = {
-      val c = posting.select(
-          call_function("hamming_pruned_pairs_flat", col("es"), lit(w),
-            lit(hMax)).as(Seq("d1", "d2")))
-        .repartition(col("d1"))
-        .distinct()
-      c.hint("merge")
-        .join(base.select(col("id").as("d1"), col("v").as("v1"),
-          col("n2").as("nn1")), Seq("d1"))
-        .hint("merge")
-        .join(base.select(col("id").as("d2"), col("v").as("v2"),
-          col("n2").as("nn2")), Seq("d2"))
-        .select(col("d1"), col("d2"),
-          (call_function("vec_dot", col("v1"), col("v2")) /
-            sqrt(col("nn1") * col("nn2"))).as("cos"))
-        .where(col("cos") >= 0.9)
-        .select(col("d1"), col("d2"), round(col("cos"), 4).as("cos"))
-    }
-    leg("full_1ex")(full1ex)
   }
 
   private def probeLshPairs(spark: SparkSession, sfDir: String,
@@ -486,26 +446,10 @@ object ScaleProbe {
     }
     spark.stop()
     dirs.foreach { case (m, dir, twinCut) =>
-      val s = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // dead-shuffle GC (see the main session's note): the 2.2M-vector
-        // leg's min-of-2 runs spill tens of GB each — without periodic
-        // GC run 1's dead files survive into run 2 and the disk dies
-        .config("spark.cleaner.periodicGC.interval", "30s")
-        // mirror Bench's ObjectHashAggregate fallback (r13): Spark's
-        // default falls back to SORT-based aggregation at 128 distinct
-        // groups per partition, and the (band, bucket) posting aggregate
-        // has millions — the probe would otherwise measure the default-
-        // config sort spill, not the operator (Bench.scala sets the same)
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-          sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "262144"))
-        .getOrCreate()
-      graft.plans.GraftExtensions.register(s)
-      s.range(1000000).selectExpr("sum(id % 7)").collect()
+      // dead-shuffle GC (see main): the 2.2M-vector leg's min-of-2 runs
+      // spill tens of GB each — without periodic GC run 1's dead files
+      // survive into run 2 and the disk dies
+      val s = session(dir)
       val d = s.read.parquet(dir)
       val nVec = d.count()
       val (p, bands) = operators.Similarity.lshPairKnobs(nVec, 0.9)
@@ -597,15 +541,7 @@ object ScaleProbe {
     * one 500 k-doc jaccard run spills ~dozens of GB, so two runs' worth
     * in one session can exceed the disk). */
   private def inOwnSession(dir: String)(f: DataFrame => Unit): Double = {
-    val s = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    s.range(1000000).selectExpr("sum(id % 7)").collect() // codegen warmup
+    val s = session(dir)
     val d = s.read.parquet(dir)
     val best = (1 to 2).map { i =>
       if (i > 1) { System.gc(); Thread.sleep(3000) }

@@ -27,16 +27,10 @@ object StreamProbe {
   private val EventsPerKey = 20
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val legs = if (args.isEmpty) Seq("kit", "dedup", "wmagg", "session")
                else args.toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the corpus is synthesized per leg: size the session for none
+    val spark = Session.build(0L, Session.cpus(8))
 
     println(f"${"leg"}%-8s ${"store"}%-8s ${"keys"}%9s ${"rows"}%9s " +
       f"${"stateRows"}%10s ${"stateMB"}%8s ${"batches"}%8s ${"maxBatchS"}%9s ${"totalS"}%7s")

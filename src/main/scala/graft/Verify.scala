@@ -4,30 +4,14 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The session the gate checks under: Bench's, so it checks the plans
+    * the bench times (SessionSpec compares the two). */
+  def session(sfDir: String): SparkSession = Session.build(sfDir, Session.cpus(4))
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // dev-time: verify a subset of queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Volume-derived scan splits, same rationale as Bench (r12): the
-    // single-file MakeScale corpora need sub-128MiB splits to scan in
-    // parallel at all; floored at the corpus row-group size (1 MiB).
-    def dirBytes(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles).map(_.map(dirBytes).sum).getOrElse(0L)
-    val autoMaxPart = math.min(128L << 20,
-      math.max(1L << 20, dirBytes(new java.io.File(sfDir)) / (4 * cpus.toLong)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", autoMaxPart.toString))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // one optimizer config for every query (q54 relies on the rule;
-    // registering here keeps plans consistent across the whole run)
-    spark.experimental.extraOptimizations = Seq(graft.plans.BandedIntervalJoinRule)
+    val spark = session(sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

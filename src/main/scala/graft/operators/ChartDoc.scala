@@ -60,9 +60,8 @@ object ChartDoc {
     // the single scan + one exchange + sort below stays cheaper —
     // sorting n rows by (t, o) within 60 series partitions is simply
     // fast relative to a second parquet scan. The window form stays;
-    // the rejected form (packed (t<<32|o) first-reading min, enforced
-    // packing guards) lives in DiagChart for re-measurement if a
-    // deploy's series count or row volume ever moves the crossover.
+    // the rejected form's plans are kept in plans/r14/q89_* for the day
+    // a deploy's series count or row volume moves the crossover.
     val series = Window.partitionBy(col("st"), col("pol"))
     val rows = base
       .withColumn("rn", row_number().over(series.orderBy(col("t"), col("o"))))

@@ -107,8 +107,7 @@ object Dedup {
     * representative before near-dup detection. */
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column,
                         n: Int, threshold: Double,
-                        maxShingleDf: Option[Int] = None,
-                        sizeCut: Boolean = true): DataFrame = {
+                        maxShingleDf: Option[Int] = None): DataFrame = {
     val sh = shingleRows(df, id, text, n)
     maxShingleDf match {
       case None =>
@@ -268,12 +267,9 @@ object Dedup {
           // 5.1e-5 epsilon is the HALF_UP round-at-4-decimals boundary
           // plus a conservative double-representation guard (see
           // SortedPairsSizeCut). Measured at sf0.1: 1.27 M → 0.97 M
-          // generated pairs (−24%). `sizeCut = false` keeps the uncut
-          // generator for same-JVM A/B probes (DfProbe).
-          val pairGen =
-            if (sizeCut) call_function("pairs_of_sorted_sizecut", col("ids"),
-              lit(nshBits), lit(threshold - 5.1e-5))
-            else call_function("pairs_of_sorted", col("ids"))
+          // generated pairs (−24%).
+          val pairGen = call_function("pairs_of_sorted_sizecut", col("ids"),
+            lit(nshBits), lit(threshold - 5.1e-5))
           val iUc = uc.select(pairGen.as(Seq("p1", "p2")))
             .groupBy(col("p1"), col("p2"))
             .agg(count(lit(1)).as("i_uc"))

@@ -202,8 +202,9 @@ object Similarity {
     // r14 measured-and-REJECTED (guide §1 discipline): repartitioning
     // the candidate stream by d1 before the distinct merges the dedup
     // exchange with the verify join's (2 exchanges → 1 in the plan) —
-    // but the ×10-probe interleaved A/B ran it SLOWER (full 3.18 s vs
-    // this shape 2.79 s min-of-3, lshstage full vs full_2ex legs): the
+    // but the ×10-probe interleaved A/B ran it SLOWER (this shipped
+    // shape 2.79 s vs the rejected 1-exchange form 3.18 s, min-of-3;
+    // plan dump plans/r14/q91_lsh_neardup_pairs_1ex_rejected.txt): the
     // removed exchange carries only ~16 B × survivors (~3 MB at 200 k
     // candidates), the 1-exchange form gives up the Generate→partial-agg
     // codegen fusion, and hashing on d1 alone spreads worse than

@@ -44,10 +44,6 @@ object Replay {
     Files.deleteIfExists(p)
   }
 
-  private def dirBytes(f: java.io.File): Long =
-    if (f.isFile) f.length
-    else Option(f.listFiles).map(_.map(dirBytes).sum).getOrElse(0L)
-
   /** Volume-derived state-partition count for the STATEFUL replays
     * (r13 opt round, guide §2.2/§6): every micro-batch commits one state
     * file per shuffle partition per stateful operator, so with the
@@ -63,10 +59,7 @@ object Replay {
     * lifetime peak, not its first hour). Output values are partition-
     * invariant (keyed state, decimal-exact sums) — oracle-checked. */
   private def stateParts(sfDir: String): Int =
-    sys.props.get("graft.state.parts")
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_PARTS")).map(_.toInt)
-      .getOrElse(math.min(512L, math.max(4L,
-        dirBytes(new java.io.File(sfDir)) / (4L << 20))).toInt)
+    math.min(512L, math.max(4L, graft.Session.dirBytes(sfDir) / (4L << 20))).toInt
 
   /** Runs `body` (a stream build + start + awaitTermination) with
     * `spark.sql.shuffle.partitions` set to the volume-derived state
@@ -162,6 +155,26 @@ object Replay {
     val src = java.nio.file.Paths.get(s"$sfDir/events.parquet")
     Files.createSymbolicLink(inDir.resolve("replay-0.parquet"), src)
     Files.createSymbolicLink(inDir.resolve("replay-1.parquet"), src)
+    // Bucket count derived from corpus VOLUME (r14, VERDICT r13 item 6;
+    // guide §6 file sizing): target 256 MiB per bucket file, PLUS a
+    // write-parallelism floor — the upsert's staged write is one task
+    // per touched bucket (ArchiveSink clusters by bucket), so too few
+    // buckets serialize the write on a many-core box: min(cores, one
+    // bucket per 8 MiB), inactive once volume/256 MiB exceeds the core
+    // count. Both r14 mis-derivations were CAUGHT BY MEASUREMENT and
+    // corrected: the stateParts 4-MiB divisor gave 38 buckets at sf1
+    // (1.77× slower — per-file constants), a pure 256-MiB divisor gave
+    // 4 (7.12 vs 5.92 s against 16 — write serialized). This form:
+    // sf0.1 → 4 (A/B: 4 beats 16, 2.63 vs 2.85), sf1 → 19 (≈ the 16
+    // that beats 4, 5.92 vs 7.12), sf10 → 32, 100 TB → the 512 clamp.
+    // Creation-time only: an EXISTING archive's stored marker count
+    // always wins inside upsert, so layouts never shift under a reader
+    // (the replay's archive dir is fresh per run). Derived once per
+    // replay, not per micro-batch: the corpus does not change under it.
+    val bytes = graft.Session.dirBytes(sfDir)
+    val cores = spark.sparkContext.defaultParallelism
+    val buckets = math.min(512L, math.max(4L,
+      math.max(bytes / (256L << 20), math.min(cores.toLong, bytes / (8L << 20))))).toInt
     val stream = spark.readStream
       .schema(batchSchema)
       .option("maxFilesPerTrigger", "1")
@@ -170,31 +183,6 @@ object Replay {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", tmpRoot.resolve("ckpt").toString)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Bucket count derived from corpus VOLUME (r14, VERDICT r13
-        // item 6; guide §6 file sizing): target 256 MiB per bucket
-        // file, PLUS a write-parallelism floor — the upsert's staged
-        // write is one task per touched bucket (ArchiveSink clusters by
-        // bucket), so too few buckets serialize the write on a
-        // many-core box: min(cores, one bucket per 8 MiB), inactive
-        // once volume/256 MiB exceeds the core count. Both r14
-        // mis-derivations were CAUGHT BY MEASUREMENT and corrected:
-        // the stateParts 4-MiB divisor gave 38 buckets at sf1 (1.77×
-        // slower — per-file constants), a pure 256-MiB divisor gave 4
-        // (7.12 vs 5.92 s against 16 — write serialized). This form:
-        // sf0.1 → 4 (A/B: 4 beats 16, 2.63 vs 2.85), sf1 → 19 (≈ the
-        // 16 that beats 4, 5.92 vs 7.12), sf10 → 32, 100 TB → the 512
-        // clamp. Creation-time only: an EXISTING archive's stored
-        // marker count always wins inside upsert, so layouts never
-        // shift under a reader (the replay's archive dir is fresh per
-        // run). Overridable for paired A/Bs via -Dgraft.archive.buckets.
-        val buckets = sys.props.get("graft.archive.buckets").map(_.toInt)
-          .getOrElse {
-            val bytes = dirBytes(new java.io.File(sfDir))
-            val cores = batch.sparkSession.sparkContext.defaultParallelism
-            math.min(512L, math.max(4L,
-              math.max(bytes / (256L << 20),
-                math.min(cores.toLong, bytes / (8L << 20))))).toInt
-          }
         ArchiveSink.upsert(batch, archiveDir,
           keys = Seq("event_id"), version = "ts", numBuckets = buckets)
       }

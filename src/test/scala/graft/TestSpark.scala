@@ -3,19 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (session startup dominates
-  * test wall-clock otherwise). */
+  * test wall-clock otherwise): the engine's own, sized for an empty
+  * corpus — the suites read in-memory frames and the tiny fixtures. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s.experimental.extraOptimizations = Seq(graft.plans.BandedIntervalJoinRule)
-    graft.plans.GraftExtensions.register(s) // geohash + vec_dot natives
-    s
-  }
+  lazy val spark: SparkSession = Session.build(0L, 4)
 }
