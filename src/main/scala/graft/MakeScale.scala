@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   * output quadratic and the sweep would measure the answer's size, not
   * the operators):
   *  - events: `event_id`/`user_id` offset by data-derived strides
-  *    (ScaleProbe's rule — hardcoded strides would silently collide on
-  *    bigger inputs); replicas behave as new kits with identical series.
+  *    (hardcoded strides would silently collide on bigger inputs); replicas behave as new kits with identical series.
   *  - documents: `doc_id` offset; text token-salted by SUFFIXING every
   *    token (`word` → `word_r<i>`) so replicas share NO shingles —
   *    near-dup pair counts scale linearly, one planted set per replica.

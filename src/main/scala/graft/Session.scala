@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one engine session: every main (Bench, Verify, Explain, MakeScale,
-  * the probes) and the test suite open it here, so the correctness gate
+  * PlantedCheck) and the test suite open it here, so the correctness gate
   * checks the physical plans the bench times.
   *
   * Each setting is derived from the core count and the corpus volume.

@@ -94,6 +94,36 @@ object SparkEntry {
   /** Epoch microseconds of a (possibly NTZ) timestamp column. */
   private def eUs(c: Column): Column = unix_micros(c.cast("timestamp"))
 
+  /** The planted-twin embedding corpus of q91, q102, q111 and q113:
+    * every embedding as `(id, v array<double>)` plus a perturbed twin of
+    * every 10th vector — integer-rational deltas, bit-identical in both
+    * engines — giving true near-dups spread around cos 0.9 (the raw
+    * embeddings are near-orthogonal, max pair cos 0.51). Twin ids sit
+    * above the data-derived stride max(id)+1, one eager job (r13: the
+    * old fixed +10000 COLLIDED with base ids once the corpus passed 10k
+    * vectors, and the sketch-prune mirror joins band codes BY ID, which
+    * double-counts hamming sums under id duplication — caught by the
+    * r13 sf1 gate). `isBench` adds q111's `is_bench` column, true on the
+    * twins. Oracle twin: [[plantedTwinCorpusSql]]. */
+  private def plantedTwinCorpus(s: SparkSession, d: String,
+                                isBench: Boolean = false): DataFrame = {
+    val base = Tables.embeddings(s, d).select(
+      col("vec_id").cast("long").as("id"), col("embedding").as("v"))
+    val stride = base.agg(max(col("id"))).head().getLong(0) + 1
+    def flag(twin: Boolean): Seq[Column] =
+      if (isBench) Seq(lit(twin).as("is_bench")) else Nil
+    val twins = base.where(col("id") % 10 === 0)
+      .withColumn("v2", transform(col("v"), (x, i) =>
+        x.cast("double") +
+          (((col("id") * 31 + i.cast("long") * 17) % 7) - 3).cast("double") *
+            (lit(0.02) + (col("id") % 4).cast("double") * lit(0.01))))
+      .select(Seq((col("id") + stride).as("id"), col("v2").as("v")) ++
+        flag(true): _*)
+    base.select(Seq(col("id"),
+        transform(col("v"), x => x.cast("double")).as("v")) ++ flag(false): _*)
+      .unionByName(twins)
+  }
+
   /** Flagship query on sf=0.001: revenue per nation over broadcast dims
     * (J1). Chosen timestamp-free so it runs under any driver session
     * config; the richer time-series flagships are q02/q03. */
@@ -1253,35 +1283,11 @@ object SparkEntry {
     // Q91 — LSH-banded near-dup PAIRS: the scale path for q46's exact
     // all-pairs cosine (the one quadratic in the contract). Candidates =
     // pairs colliding in ≥1 SRP band (4 bands × 8 planes, planes = first
-    // corpus vectors), bucket-capped, then exact-cosine verified at 0.9.
-    // The raw embeddings are near-orthogonal (max pair cos 0.51), so the
-    // corpus is augmented with deterministic perturbed twins of every
-    // 10th vector — integer-rational deltas, bit-identical in both
-    // engines — giving true near-dups spread around the threshold.
-    // r13: the twin-id offset is max(id)+1 (data-derived, mirrored in
-    // SQL) — the old fixed +10000 COLLIDED with base ids once the corpus
-    // passed 10k vectors (sf1), and while the duplicate ids computed
-    // identically in both engines pre-r13, the sketch-prune mirror joins
-    // band codes BY ID, which double-counts hamming sums under id
-    // duplication (caught by the r13 sf1 gate).
-    "q91_lsh_neardup_pairs" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s) // vec_dot
-      val e = Tables.embeddings(s, d)
-      val base = e.select(col("vec_id").cast("long").as("id"),
-        col("embedding").as("v"))
-      val vStride = base.agg(max(col("id"))).head().getLong(0) + 1
-      val twins = base.where(col("id") % 10 === 0)
-        .withColumn("v2", transform(col("v"), (x, i) =>
-          x.cast("double") +
-            (((col("id") * 31 + i.cast("long") * 17) % 7) - 3).cast("double") *
-              (lit(0.02) + (col("id") % 4).cast("double") * lit(0.01))))
-        .select((col("id") + vStride).as("id"), col("v2").as("v"))
-      val corpus = base
-        .select(col("id"), transform(col("v"), x => x.cast("double")).as("v"))
-        .unionByName(twins)
-      Similarity.cosineNearDupPairsLsh(corpus, col("id"), col("v"),
-        threshold = 0.9, planesPerBand = 8, bands = 4)
-    }),
+    // corpus vectors), bucket-capped, then exact-cosine verified at 0.9,
+    // over the planted-twin corpus (see plantedTwinCorpus).
+    "q91_lsh_neardup_pairs" -> ((s, d) =>
+      Similarity.cosineNearDupPairsLsh(plantedTwinCorpus(s, d), col("id"),
+        col("v"), threshold = 0.9, planesPerBand = 8, bands = 4)),
 
     // Q92 — J2 stream-static enrichment across a REAL micro-batch
     // boundary (KitCache metadata lookup, MyMQTTclient.py:606-827): the
@@ -1434,25 +1440,9 @@ object SparkEntry {
     // shape is the documented quadratic at 10× corpus — 143 s vs 57 s
     // at sf10). Same twin-augmented corpus as q91; the oracle recomputes
     // lshPairKnobs IN SQL from count(*) so it tracks any SF.
-    "q102_lsh_neardup_auto" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s) // vec_dot
-      val e = Tables.embeddings(s, d)
-      val base = e.select(col("vec_id").cast("long").as("id"),
-        col("embedding").as("v"))
-      // data-derived twin offset — see the q91 r13 note
-      val vStride = base.agg(max(col("id"))).head().getLong(0) + 1
-      val twins = base.where(col("id") % 10 === 0)
-        .withColumn("v2", transform(col("v"), (x, i) =>
-          x.cast("double") +
-            (((col("id") * 31 + i.cast("long") * 17) % 7) - 3).cast("double") *
-              (lit(0.02) + (col("id") % 4).cast("double") * lit(0.01))))
-        .select((col("id") + vStride).as("id"), col("v2").as("v"))
-      val corpus = base
-        .select(col("id"), transform(col("v"), x => x.cast("double")).as("v"))
-        .unionByName(twins)
-      Similarity.cosineNearDupPairsLshAuto(corpus, col("id"), col("v"),
-        threshold = 0.9)
-    }),
+    "q102_lsh_neardup_auto" -> ((s, d) =>
+      Similarity.cosineNearDupPairsLshAuto(plantedTwinCorpus(s, d),
+        col("id"), col("v"), threshold = 0.9)),
 
     // Q103 — benchmark decontamination: training docs sharing a word
     // 4-gram with the held-out benchmark partition (source 'src19').
@@ -1552,26 +1542,9 @@ object SparkEntry {
     // contamination scenario (eval items near-identical to training
     // docs); twin ids live above a data-derived stride so they never
     // collide with corpus ids at any SF.
-    "q111_embed_decon_lsh" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val base = e.select(col("vec_id").cast("long").as("id"),
-        col("embedding").as("v"))
-      val stride = base.agg(max(col("id"))).head().getLong(0) + 1
-      val twins = base.where(col("id") % 10 === 0)
-        .withColumn("v2", transform(col("v"), (x, i) =>
-          x.cast("double") +
-            (((col("id") * 31 + i.cast("long") * 17) % 7) - 3).cast("double") *
-              (lit(0.02) + (col("id") % 4).cast("double") * lit(0.01))))
-        .select((col("id") + stride).as("id"), col("v2").as("v"),
-          lit(true).as("is_bench"))
-      val corpus = base
-        .select(col("id"),
-          transform(col("v"), x => x.cast("double")).as("v"),
-          lit(false).as("is_bench"))
-        .unionByName(twins)
-      Decontaminate.embedOverlapLsh(corpus, col("id"), col("v"),
-        col("is_bench"), threshold = 0.9)
-    }),
+    "q111_embed_decon_lsh" -> ((s, d) =>
+      Decontaminate.embedOverlapLsh(plantedTwinCorpus(s, d, isBench = true),
+        col("id"), col("v"), col("is_bench"), threshold = 0.9)),
 
     // Q112 — DSIR importance resampling: weight every training doc by
     // hashed-unigram likelihood ratio toward the held-out 'src19'
@@ -1591,23 +1564,9 @@ object SparkEntry {
     // perturbation leaves it in the same cell (cell-boundary misses are
     // SemDeDup's documented recall limitation, identically mirrored in
     // the oracle).
-    "q113_semdedup" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s) // vec_dot
-      val e = Tables.embeddings(s, d)
-      val base = e.select(col("vec_id").cast("long").as("id"),
-        col("embedding").as("v"))
-      val stride = base.agg(max(col("id"))).head().getLong(0) + 1
-      val twins = base.where(col("id") % 10 === 0)
-        .withColumn("v2", transform(col("v"), (x, i) =>
-          x.cast("double") +
-            (((col("id") * 31 + i.cast("long") * 17) % 7) - 3).cast("double") *
-              (lit(0.02) + (col("id") % 4).cast("double") * lit(0.01))))
-        .select((col("id") + stride).as("id"), col("v2").as("v"))
-      val corpus = base
-        .select(col("id"), transform(col("v"), x => x.cast("double")).as("v"))
-        .unionByName(twins)
-      Dedup.semDedup(corpus, col("id"), col("v"), threshold = 0.9)
-    })
+    "q113_semdedup" -> ((s, d) =>
+      Dedup.semDedup(plantedTwinCorpus(s, d), col("id"), col("v"),
+        threshold = 0.9))
   )
 
   /** q107 target language shares (uniform over the corpus' 5 langs). */
@@ -1711,6 +1670,28 @@ object SparkEntry {
             AND (vals[t.n] - mu)
               / sqrt(list_sum(list_transform(vals, v -> (v-mu)*(v-mu)))/(t.n-1))
               > crit.c)"""
+
+  /** DuckDB twin of [[plantedTwinCorpus]]: one SELECT yielding
+    * `(id, v[, is_bench])`, stride = max id + 1 recomputed in SQL; the
+    * e0 literals keep the twin deltas DOUBLE. */
+  private def plantedTwinCorpusSql(isBench: Boolean = false): String = {
+    def flag(twin: Boolean) =
+      if (isBench) s", ${twin.toString.toUpperCase} AS is_bench" else ""
+    s"""SELECT id, list_transform(v, x -> CAST(x AS DOUBLE)) AS v${flag(false)}
+        FROM (SELECT CAST(vec_id AS BIGINT) AS id, embedding AS v
+              FROM embeddings)
+        UNION ALL
+        SELECT id + (SELECT max(CAST(vec_id AS BIGINT)) + 1
+                     FROM embeddings) AS id,
+               list(CAST(x AS DOUBLE) +
+                    ((id*31 + (ord-1)*17) % 7 - 3) *
+                    (0.02e0 + (id % 4) * 0.01e0) ORDER BY ord) AS v${flag(true)}
+        FROM (SELECT id, unnest(v) AS x, generate_subscripts(v, 1) AS ord
+              FROM (SELECT CAST(vec_id AS BIGINT) AS id, embedding AS v
+                    FROM embeddings)
+              WHERE id % 10 = 0)
+        GROUP BY id"""
+  }
 
   def oracleSql: Map[String, String] = Map(
     "q01_filter_project" ->
@@ -3022,21 +3003,9 @@ object SparkEntry {
     // the bucket cap AND the r13 sketch-hamming prune (prn: candidate
     // pairs whose first-S band codes differ in more than hammingCut bits
     // never reach the exact verify — identical cut in both engines, see
-    // Similarity.hammingCut); e0 literals keep the twin deltas DOUBLE.
+    // Similarity.hammingCut).
     "q91_lsh_neardup_pairs" ->
-      s"""WITH raw AS (SELECT CAST(vec_id AS BIGINT) AS id, embedding AS v
-                       FROM embeddings),
-          base AS (SELECT id, list_transform(v, x -> CAST(x AS DOUBLE)) AS v
-                   FROM raw),
-          tw AS (SELECT id + (SELECT max(id) + 1 FROM raw) AS id,
-                        list(CAST(x AS DOUBLE) +
-                             ((id*31 + (ord-1)*17) % 7 - 3) *
-                             (0.02e0 + (id % 4) * 0.01e0) ORDER BY ord) AS v
-                 FROM (SELECT id, unnest(v) AS x,
-                              generate_subscripts(v, 1) AS ord
-                       FROM raw WHERE id % 10 = 0)
-                 GROUP BY id),
-          corpus AS (SELECT * FROM base UNION ALL SELECT * FROM tw),
+      s"""WITH corpus AS (${plantedTwinCorpusSql()}),
           pl AS (SELECT CAST(id // 8 AS INT) AS band, CAST(id % 8 AS INT) AS p,
                         v AS p_v
                  FROM corpus WHERE id < 32),
@@ -3432,19 +3401,7 @@ object SparkEntry {
     // ratio sits exactly on an integer, which no testdata SF's count
     // approaches. Both sides drop any band bucket larger than 1000.
     "q102_lsh_neardup_auto" ->
-      s"""WITH raw AS (SELECT CAST(vec_id AS BIGINT) AS id, embedding AS v
-                       FROM embeddings),
-          base AS (SELECT id, list_transform(v, x -> CAST(x AS DOUBLE)) AS v
-                   FROM raw),
-          tw AS (SELECT id + (SELECT max(id) + 1 FROM raw) AS id,
-                        list(CAST(x AS DOUBLE) +
-                             ((id*31 + (ord-1)*17) % 7 - 3) *
-                             (0.02e0 + (id % 4) * 0.01e0) ORDER BY ord) AS v
-                 FROM (SELECT id, unnest(v) AS x,
-                              generate_subscripts(v, 1) AS ord
-                       FROM raw WHERE id % 10 = 0)
-                 GROUP BY id),
-          corpus AS (SELECT * FROM base UNION ALL SELECT * FROM tw),
+      s"""WITH corpus AS (${plantedTwinCorpusSql()}),
           kp AS (SELECT GREATEST(4, CAST(ceil(
                           ln(GREATEST(1.0, count(*) / 8.0)) / ln(2)) AS INT))
                           AS p
@@ -3547,51 +3504,16 @@ object SparkEntry {
     "q110_bpe_train" ->
       TokenizerOps.trainMergesSql("text", k = 8),
 
-    "q111_embed_decon_lsh" -> {
-      // the same stride-offset planted-twin corpus as the Spark side
-      // (q102's twin formula; stride = max id + 1, recomputed in SQL)
-      val corpusSql =
-        """SELECT id, list_transform(v, x -> CAST(x AS DOUBLE)) AS v,
-                  FALSE AS is_bench
-           FROM (SELECT CAST(vec_id AS BIGINT) AS id, embedding AS v
-                 FROM embeddings)
-           UNION ALL
-           SELECT id + (SELECT max(CAST(vec_id AS BIGINT)) + 1
-                        FROM embeddings) AS id,
-                  list(CAST(x AS DOUBLE) +
-                       ((id*31 + (ord-1)*17) % 7 - 3) *
-                       (0.02e0 + (id % 4) * 0.01e0) ORDER BY ord) AS v,
-                  TRUE AS is_bench
-           FROM (SELECT id, unnest(v) AS x, generate_subscripts(v, 1) AS ord
-                 FROM (SELECT CAST(vec_id AS BIGINT) AS id, embedding AS v
-                       FROM embeddings)
-                 WHERE id % 10 = 0)
-           GROUP BY id"""
+    "q111_embed_decon_lsh" ->
       Decontaminate.embedOverlapLshSql("id", "v", "is_bench",
-        threshold = 0.9, sourceSql = corpusSql)
-    },
+        threshold = 0.9, sourceSql = plantedTwinCorpusSql(isBench = true)),
 
     "q112_dsir_sample" ->
       CorpusFilter.dsirWeightsSql("doc_id", "text", "source = 'src19'",
         buckets = 256, alpha = 0.1),
 
-    "q113_semdedup" -> {
-      val corpusSql =
-        """SELECT id, list_transform(v, x -> CAST(x AS DOUBLE)) AS v
-           FROM (SELECT CAST(vec_id AS BIGINT) AS id, embedding AS v
-                 FROM embeddings)
-           UNION ALL
-           SELECT id + (SELECT max(CAST(vec_id AS BIGINT)) + 1
-                        FROM embeddings) AS id,
-                  list(CAST(x AS DOUBLE) +
-                       ((id*31 + (ord-1)*17) % 7 - 3) *
-                       (0.02e0 + (id % 4) * 0.01e0) ORDER BY ord) AS v
-           FROM (SELECT id, unnest(v) AS x, generate_subscripts(v, 1) AS ord
-                 FROM (SELECT CAST(vec_id AS BIGINT) AS id, embedding AS v
-                       FROM embeddings)
-                 WHERE id % 10 = 0)
-           GROUP BY id"""
-      Dedup.semDedupSql("id", "v", threshold = 0.9, sourceSql = corpusSql)
-    }
+    "q113_semdedup" ->
+      Dedup.semDedupSql("id", "v", threshold = 0.9,
+        sourceSql = plantedTwinCorpusSql())
   )
 }

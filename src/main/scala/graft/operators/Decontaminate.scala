@@ -149,7 +149,7 @@ object Decontaminate {
     require(planeRows.length == nPlanes,
       s"embedOverlapLsh: training side has only ${planeRows.length} " +
         s"vectors for $nPlanes SRP planes (p=$p bands=$bands)")
-    val planes = planeRows.map(Similarity.planeVector)
+    val planes = planeRows.map(Similarity.planeVector(_))
     // Map-only coding of BOTH sides against the training planes (r13):
     // srp_codes computes every band code in one compiled pass — the
     // broadcast-join + partial-agg form it replaces fanned out

@@ -575,8 +575,8 @@ object Dedup {
     * that only ever compares vectors WITHIN a k-means cell — the
     * cluster scoping is what makes semantic dedup tractable at corpus
     * scale (within-cell pair work is Σ|cell|², bounded by the cell
-    * size, never n²). Cells come from [[Similarity.ivfAssign]] (first-K
-    * deterministic centroids, the q56 contract); K auto-sizes to
+    * size, never n²). Cells come from [[Similarity.ivfAssign]] over
+    * [[Similarity.firstKCentroids]] (the q56 contract); K auto-sizes to
     * `max(8, ceil(√n))` (r12): with K cells the assignment costs n·K
     * dots and the within-cell pair stage ≈ n²/K dots, so K = √n
     * equalizes both legs at n^1.5 — the r11 n/targetCell rule pinned
@@ -601,7 +601,8 @@ object Dedup {
                threshold: Double): DataFrame = {
     val n = emb.count()
     val k = semDedupK(n)
-    val cells = Similarity.ivfAssign(emb, id, vec, k)
+    val cells = Similarity.ivfAssign(emb, id, vec,
+      Similarity.firstKCentroids(emb, id, vec, k))
     val anchors = cells.select(col("cell"), col("id").as("a_id"),
       col("v").as("a_v"), col("n2").as("a_n2"))
     val dropped = cells.join(anchors, Seq("cell"))

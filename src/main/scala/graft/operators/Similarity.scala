@@ -48,6 +48,24 @@ object Similarity {
   def cosineSql(a: String, b: String): String =
     s"(${dotSql(a, b)} / sqrt(${dotSql(a, a)} * ${dotSql(b, b)}))"
 
+  /** The first `k` rows per `q_id` under `order`, numbered in `rank`
+    * (row_number: ties fall to the order's last key, deterministically). */
+  private def rankPerQuery(df: DataFrame, k: Int, order: Column*): DataFrame =
+    df.withColumn("rank", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(order: _*)))
+      .where(col("rank") <= k)
+
+  /** The top-k tail every search operator ends in: per query the `k`
+    * best `n_id`s by `score` (descending for similarities, ascending for
+    * distances), ties to the lower id, as `(q_id, rank, n_id, score)`
+    * with the score rounded to 4 decimals. */
+  private def topK(scored: DataFrame, score: String, descending: Boolean,
+                   k: Int): DataFrame =
+    rankPerQuery(scored, k,
+        if (descending) col(score).desc else col(score).asc, col("n_id").asc)
+      .select(col("q_id"), col("rank"), col("n_id"),
+        round(col(score), 4).as(score))
+
   /** Brute-force cosine top-k: for each query vector (id < nQueries),
     * the k nearest corpus vectors (excluding itself), rank-ordered,
     * cosine rounded to 4 decimals.
@@ -64,12 +82,7 @@ object Similarity {
     val scored = base.as("c").join(broadcast(q), col("q_id") =!= col("id"))
       .select(col("q_id"), col("id").as("n_id"),
         (dot(col("q_v"), col("v")) / sqrt(col("q_n2") * col("n2"))).as("cos"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        round(col("cos"), 4).as("cos"))
+    topK(scored, "cos", descending = true, k)
   }
 
   /** All pairs with cosine ≥ threshold — embedding near-dup detection.
@@ -305,28 +318,31 @@ object Similarity {
     * statistic, the ivfAssign-centroid stance). Shortfall or null
     * planes fail LOUDLY (ADVICE r12): a partial plane set silently
     * zeroes code bits and collapses recall with no trace. */
-  private[graft] def collectPlanes(base: DataFrame,
-                                       nPlanes: Int): Array[Array[Double]] = {
+  private def collectPlanes(base: DataFrame,
+                            nPlanes: Int): Array[Array[Double]] = {
     val rows = base.where(col("id") < nPlanes)
       .select(col("id").cast("long"), col("v")).collect()
     require(rows.length == nPlanes,
       s"SRP planes: expected the first $nPlanes corpus vectors " +
         s"(ids 0..${nPlanes - 1}), found ${rows.length} — a partial plane " +
         "set silently degrades band bit-width and recall")
-    rows.sortBy(_.getLong(0)).map(planeVector)
+    rows.sortBy(_.getLong(0)).map(planeVector(_))
   }
 
-  /** One plane row → dense double vector; null vectors/elements are
-    * rejected with a clear message (they would silently zero a code
-    * bit for every corpus vector). */
-  private[graft] def planeVector(r: org.apache.spark.sql.Row): Array[Double] = {
+  /** One `(id, vector)` plane or centroid row → dense double vector;
+    * null vectors/elements are rejected with a message naming the row
+    * (`what` and its id): a null plane would silently zero a code bit
+    * for every corpus vector, a null centroid leaves no usable
+    * quantizer. */
+  private[graft] def planeVector(r: org.apache.spark.sql.Row,
+                                 what: String = "SRP plane"): Array[Double] = {
     val s = r.getSeq[Any](1)
-    require(s != null, s"SRP plane ${r.get(0)}: null plane vector")
+    require(s != null, s"$what ${r.get(0)}: null vector")
     s.map {
       case f: Float => f.toDouble
       case d: Double => d
       case other => throw new IllegalArgumentException(
-        s"SRP plane ${r.get(0)}: null or non-numeric element ($other)")
+        s"$what ${r.get(0)}: null or non-numeric element ($other)")
     }.toArray
   }
 
@@ -358,98 +374,73 @@ object Similarity {
         typedLit(pl.map(_.toSeq).toSeq), lit(planes)), 1).as("bucket"))
   }
 
-  /** IVF cell assignment: nearest centroid by squared euclidean distance
-    * (argmin over `‖c‖² − 2·v·c`; ‖v‖² is constant per vector and drops
-    * out), ties broken by centroid id. Centroids are the first K corpus
-    * vectors — a deterministic stand-in for the k-means training step,
-    * so engine and oracle share no trained state.
+  /** The first-K centroid stand-in: the corpus vectors with id < `k`,
+    * by id — a deterministic substitute for the k-means training step,
+    * so engine and oracle share no trained state. One bounded collect
+    * (K rows by contract; a trained IVF collects the same K×d matrix per
+    * round). Null centroids fail LOUDLY (ADVICE r12): the contract (a
+    * usable quantizer) requires dense centroids. */
+  def firstKCentroids(emb: DataFrame, id: Column, vec: Column,
+                      k: Int): Seq[(Int, Seq[Double])] =
+    emb.select(id.cast("long").as("id"), vec.as("v"))
+      .where(col("id") < k).collect()
+      .map(r => (Math.toIntExact(r.getLong(0)),
+        planeVector(r, "IVF centroid").toSeq))
+      .sortBy(_._1).toSeq
+
+  /** IVF cell assignment: `(id, v, n2, cell)` with `cell` the nearest of
+    * `cents` by squared euclidean distance (argmin over `‖c‖² − 2·v·c`;
+    * ‖v‖² is constant per vector and drops out), ties broken by centroid
+    * id. The one assignment kernel: first-K ([[firstKCentroids]]),
+    * trained centroids and the [[kmeansCentroids]] Lloyd step all run it.
     *
-    * The argmin aggregate carries ONLY (score, c_id) — never the
-    * vector. An earlier shape smuggled `v` through the n×K fan-out via
-    * `first(v)` and at auto-K corpus sizes (K ∝ n) the per-fan-out-row
-    * array copy dominated everything: the 66 k-vector semdedup probe
-    * leg measured 84.4 s, and re-joining `v` by id afterwards (one
-    * narrow n-row join) cut it to seconds. */
+    * ONE map-only projection: the codegen'd `nearest_centroid` argmin
+    * loops the K×d matrix per row — the lexicographic (s, c_id) minimum
+    * of the `min(struct(s, c_id))` broadcast-join form it replaced, with
+    * bit-equal dots, zero shuffle. r12: that join's n×K fan-out
+    * materialized both vectors on every joined row before the argmin
+    * aggregate — 274.9 s at 220 k vectors × 860 cells. A null `v` on a
+    * data row gets the lowest centroid id (the join form's nulls-first
+    * struct-min — see graft.plans.NearestCentroid); an empty centroid
+    * list assigns no rows, as the join form's empty inner join did. */
   def ivfAssign(emb: DataFrame, id: Column, vec: Column,
-                kCentroids: Int): DataFrame = {
+                cents: Seq[(Int, Seq[Double])]): DataFrame = {
     ensureRegistered(emb)
     val base = emb.select(id.as("id"), vec.as("v"), norm2(vec).as("n2"))
-    // Bounded collect: K centroid rows by contract (the first-K
-    // stand-in; a trained IVF collects the same K×d matrix per round).
-    // r12: the previous `base.join(broadcast(cents))` n×K fan-out
-    // materialized both vectors on every joined row before the argmin
-    // aggregate — 274.9 s at 220 k vectors × 860 cells (DiagSem). The
-    // assignment is now ONE map-only projection: the codegen'd
-    // `nearest_centroid` argmin loops the K×d matrix per row (same
-    // (s, c_id) lexicographic minimum, bit-equal dots), zero shuffle.
-    // Null centroids fail LOUDLY (ADVICE r12): a null vector/element in
-    // the first-K window previously NPE'd/MatchError'd deep in the
-    // collect; the contract (a usable quantizer) requires dense
-    // centroids, so reject with a message naming the offender. A null
-    // `v` on a DATA row is fine: nearest_centroid assigns it the lowest
-    // centroid id (the old join form's nulls-first struct-min — see
-    // graft.plans.NearestCentroid).
-    val cents = base.where(col("id") < kCentroids)
-      .select(col("id"), col("v"), col("n2")).collect()
-      .map { r =>
-        val s = r.getSeq[Any](1)
-        require(s != null, s"ivfAssign: centroid ${r.getLong(0)} has a " +
-          "null vector — the first-K centroid contract requires dense " +
-          "non-null vectors")
-        val v = s.map {
-          case f: Float => f.toDouble
-          case d: Double => d
-          case other => throw new IllegalArgumentException(
-            s"ivfAssign: centroid ${r.getLong(0)} has a null or " +
-              s"non-numeric element ($other)")
-        }.toArray
-        (r.getLong(0), v, r.getDouble(2))
-      }.sortBy(_._1)
-    if (cents.isEmpty) // old inner-join form yielded zero rows
+    if (cents.isEmpty)
       return base.withColumn("cell", lit(null).cast("long")).where(lit(false))
     base.select(col("id"), col("v"), col("n2"),
       call_function("nearest_centroid", col("v"),
-        typedLit(cents.map(_._1).toSeq),
-        typedLit(cents.map(_._3).toSeq),
-        typedLit(cents.map(_._2.toSeq).toSeq)).as("cell"))
+        typedLit(cents.map(_._1.toLong)),
+        typedLit(cents.map { case (_, cv) => sqNorm(cv) }),
+        typedLit(cents.map(_._2))).as("cell"))
   }
 
-  /** IVF ANN (nprobe = 1): exact cosine top-k within the query's own
-    * centroid cell. At scale each cell is a co-partitioned shard of the
-    * index — the probe shuffles on the cell id only. */
+  /** ‖c‖² as [[dot]] computes it: left-to-right double fold. */
+  private def sqNorm(cv: Seq[Double]): Double =
+    cv.foldLeft(0.0)((acc, x) => acc + x * x)
+
+  /** IVF ANN (nprobe = 1) over the first-K centroid stand-in: exact
+    * cosine top-k within the query's own cell — the oracle-shareable
+    * q56 form of [[annIvfWith]]. */
   def annIvf(emb: DataFrame, id: Column, vec: Column,
-             kCentroids: Int, nQueries: Int, k: Int): DataFrame = {
-    ensureRegistered(emb)
-    val cells = ivfAssign(emb, id, vec, kCentroids)
-    val q = cells.where(col("id") < nQueries)
-      .select(col("id").as("q_id"), col("v").as("q_v"),
-        col("n2").as("q_n2"), col("cell").as("q_cell"))
-    val scored = cells.as("c")
-      .join(broadcast(q),
-        col("q_cell") === col("cell") && col("q_id") =!= col("id"))
-      .select(col("q_id"), col("id").as("n_id"),
-        (dot(col("q_v"), col("v")) / sqrt(col("q_n2") * col("n2"))).as("cos"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        round(col("cos"), 4).as("cos"))
-  }
+             kCentroids: Int, nQueries: Int, k: Int): DataFrame =
+    annIvfWith(emb, id, vec, firstKCentroids(emb, id, vec, kCentroids),
+      nprobe = 1, nQueries, k)
 
   /** Distributed Lloyd's k-means — the IVF training step the first-K
-    * stand-in ([[ivfAssign]], q56) skips. Init = deterministic
-    * farthest-point ([[farthestPointInit]]); each iteration: (1) broadcast the K current
-    * centroids, (2) assign every vector to the nearest (argmin over
-    * `‖c‖² − 2·v·c`, same algebra as [[ivfAssign]]), (3) recompute
-    * element-wise means with one `posexplode` + (cell, dim) hash
-    * aggregate — map-side combined, K·d result rows. Empty cells keep
-    * their previous centroid so K never shrinks.
+    * stand-in ([[firstKCentroids]], q56) skips. Init = deterministic
+    * farthest-point ([[farthestPointInit]]); each iteration: (1) assign
+    * every vector to the nearest of the K current centroids
+    * ([[ivfAssign]]), (2) recompute element-wise means with one
+    * `posexplode` + (cell, dim) hash aggregate — map-side combined, K·d
+    * result rows. Empty cells keep their previous centroid so K never
+    * shrinks.
     *
-    * Scale stance: per iteration one broadcast join + one aggregate over
-    * N·d exploded rows — linear, no pairwise anything. The K×d centroid
+    * Scale stance: per iteration one map-only assignment + one aggregate
+    * over N·d exploded rows — linear, no pairwise anything. The K×d centroid
     * state collected per round is bounded DRIVER state by contract (the
-    * centroid set must broadcast for assignment anyway), not a data
+    * assignment ships the centroid set to every task anyway), not a data
     * collect. `iters` is small (Lloyd's converges fast on IVF-grade
     * quantization; FAISS defaults to 10-25).
     */
@@ -465,15 +456,8 @@ object Similarity {
     try {
       var cents = farthestPointInit(base, k)
       for (_ <- 1 to iters) {
-        val cdf = cents.map { case (cid, cv) => (cid, cv, cv.map(x => x * x).sum) }
-          .toDF("c_id", "c_v", "cn2")
-        val means = base.join(broadcast(cdf))
-          .groupBy(col("id"))
-          .agg(min(struct(
-              (col("cn2") - lit(2.0) * dot(col("v"), col("c_v"))).as("s"),
-              col("c_id").as("c"))).as("m"),
-            first(col("v")).as("v"))
-          .select(col("m.c").as("cell"), posexplode(col("v")).as(Seq("dim", "x")))
+        val means = ivfAssign(base, col("id"), col("v"), cents)
+          .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
           .groupBy(col("cell"), col("dim"))
           .agg(avg(col("x")).as("mx"))
           .groupBy(col("cell"))
@@ -522,24 +506,8 @@ object Similarity {
   private def centroidFrame(spark: org.apache.spark.sql.SparkSession,
                             cents: Seq[(Int, Seq[Double])]): DataFrame = {
     import spark.implicits._
-    cents.map { case (cid, cv) => (cid, cv, cv.map(x => x * x).sum) }
+    cents.map { case (cid, cv) => (cid, cv, sqNorm(cv)) }
       .toDF("c_id", "c_v", "cn2")
-  }
-
-  /** [[ivfAssign]] against an EXPLICIT centroid list instead of the
-    * first-K stand-in — the probe's cell-balance audit uses this. */
-  def ivfAssignWith(emb: DataFrame, id: Column, vec: Column,
-                    cents: Seq[(Int, Seq[Double])]): DataFrame = {
-    ensureRegistered(emb)
-    val cdf = broadcast(centroidFrame(emb.sparkSession, cents))
-    emb.select(id.as("id"), vec.as("v"), norm2(vec).as("n2"))
-      .join(cdf)
-      .groupBy(col("id"))
-      .agg(min(struct(
-          (col("cn2") - lit(2.0) * dot(col("v"), col("c_v"))).as("s"),
-          col("c_id").as("c"))).as("m"),
-        first(col("v")).as("v"), first(col("n2")).as("n2"))
-      .select(col("id"), col("v"), col("n2"), col("m.c").as("cell"))
   }
 
   /** IVF ANN against an explicit centroid list with multi-cell probing:
@@ -553,15 +521,12 @@ object Similarity {
                  nQueries: Int, k: Int): DataFrame = {
     ensureRegistered(emb)
     val cdf = broadcast(centroidFrame(emb.sparkSession, cents))
-    val base = emb.select(id.as("id"), vec.as("v"), norm2(vec).as("n2"))
-    val corpus = ivfAssignWith(emb, id, vec, cents)
-    val q = base.where(col("id") < nQueries).join(cdf)
-      .select(col("id").as("q_id"), col("v").as("q_v"), col("n2").as("q_n2"),
-        (col("cn2") - lit(2.0) * dot(col("v"), col("c_v"))).as("s"),
-        col("c_id"))
-      .withColumn("pr", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("s").asc, col("c_id").asc)))
-      .where(col("pr") <= nprobe)
+    val corpus = ivfAssign(emb, id, vec, cents)
+    val q = rankPerQuery(corpus.where(col("id") < nQueries).join(cdf)
+        .select(col("id").as("q_id"), col("v").as("q_v"), col("n2").as("q_n2"),
+          (col("cn2") - lit(2.0) * dot(col("v"), col("c_v"))).as("s"),
+          col("c_id")),
+        nprobe, col("s").asc, col("c_id").asc)
       .select(col("q_id"), col("q_v"), col("q_n2"), col("c_id").as("q_cell"))
     // no distinct needed: the corpus side has ONE cell per id and the
     // probed cells are distinct per query, so a pair appears at most once
@@ -570,12 +535,7 @@ object Similarity {
         col("q_cell") === col("cell") && col("q_id") =!= col("id"))
       .select(col("q_id"), col("id").as("n_id"),
         (dot(col("q_v"), col("v")) / sqrt(col("q_n2") * col("n2"))).as("cos"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        round(col("cos"), 4).as("cos"))
+    topK(scored, "cos", descending = true, k)
   }
 
   /** Trained IVF ANN: k-means centroids ([[kmeansCentroids]]) + nprobe
@@ -627,12 +587,7 @@ object Similarity {
         col("q_id") === col("qq"))
       .select(col("q_id"), col("n_id"),
         (dot(col("q_v"), col("v")) / sqrt(col("q_n2") * col("n2"))).as("cos"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        round(col("cos"), 4).as("cos"))
+    topK(scored, "cos", descending = true, k)
   }
 
   /** Recall@k of an ANN result against the brute-force ground truth:
@@ -670,12 +625,7 @@ object Similarity {
         col("q_bucket") === col("bucket") && col("q_id") =!= col("id"))
       .select(col("q_id"), col("id").as("n_id"),
         (dot(col("q_v"), col("v")) / sqrt(col("q_n2") * col("n2"))).as("cos"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        round(col("cos"), 4).as("cos"))
+    topK(scored, "cos", descending = true, k)
   }
 
   // ---------------------------------------------- product quantization
@@ -773,12 +723,7 @@ object Similarity {
       .where(col("q_id") =!= col("n_id"))
       .groupBy(col("q_id"), col("n_id"))
       .agg(sum(col("pd")).cast("double").as("est"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("est").asc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        round(col("est"), 4).as("est"))
+    topK(scored, "est", descending = false, k)
   }
 
   /** IVF-PQ (IVFADC, Jégou/Douze/Schmid 2011 §IV): the composed
@@ -807,17 +752,10 @@ object Similarity {
     * is addition-order-independent. */
   def ivfPqAdcTopK(emb: DataFrame, id: Column, vec: Column,
                    kCoarse: Int, nprobe: Int, m: Int, dsub: Int, ksub: Int,
-                   nQueries: Int, k: Int): DataFrame = {
-    ensureRegistered(emb)
-    val cents = emb.select(id.as("c_id"),
-        transform(vec, x => x.cast("double")).as("c_v"))
-      .where(col("c_id") < kCoarse)
-      .withColumn("c_n2", dot(col("c_v"), col("c_v")))
-    val cells = ivfAssign(emb, id, vec, kCoarse) // (id, v, n2, cell)
-    ivfPqAdcTail(emb, id, vec, cents, cells, m, dsub,
+                   nQueries: Int, k: Int): DataFrame =
+    ivfPqAdc(emb, id, vec, firstKCentroids(emb, id, vec, kCoarse),
       resid => pqCodebookFirstK(resid, col("id"), col("res"), m, dsub, ksub),
-      nprobe, nQueries, k)
-  }
+      nprobe, m, dsub, nQueries, k)
 
   /** [[ivfPqAdcTopK]] with TRAINED quantizers at both levels: coarse
     * cells from [[kmeansCentroids]] (farthest-point init, Lloyd's) and
@@ -825,46 +763,28 @@ object Similarity {
     * per subspace over the residuals). Same serving shape; only the
     * offline index-build stages change — this is the production
     * composition the first-K q98 oracle stands in for (trained state
-    * can't be shared with DuckDB). Probe-audited against the first-K
-    * pipeline on a planted-cluster corpus in ScaleProbe (recall@k +
-    * cell balance). */
+    * can't be shared with DuckDB). */
   def ivfPqAdcTopKTrained(emb: DataFrame, id: Column, vec: Column,
                           kCoarse: Int, coarseIters: Int, pqIters: Int,
                           nprobe: Int, m: Int, dsub: Int, ksub: Int,
                           nQueries: Int, k: Int): DataFrame =
-    ivfPqAdcTopKTrainedWith(emb, id, vec,
-      kmeansCentroids(emb, id, vec, kCoarse, coarseIters),
-      pqIters, nprobe, m, dsub, ksub, nQueries, k)
-
-  /** [[ivfPqAdcTopKTrained]] against PRE-TRAINED coarse centroids: a
-    * caller that also audits cell balance (ScaleProbe) trains k-means
-    * once and threads the same centroid list through both the serving
-    * pipeline and [[ivfAssignWith]] — retraining for each leg would
-    * double the offline cost and silently assume trainer determinism. */
-  def ivfPqAdcTopKTrainedWith(emb: DataFrame, id: Column, vec: Column,
-                              trained: Seq[(Int, Seq[Double])], pqIters: Int,
-                              nprobe: Int, m: Int, dsub: Int, ksub: Int,
-                              nQueries: Int, k: Int): DataFrame = {
-    ensureRegistered(emb)
-    val cents = centroidFrame(emb.sparkSession, trained)
-      .withColumnRenamed("cn2", "c_n2")
-    val cells = ivfAssignWith(emb, id, vec, trained)
-    ivfPqAdcTail(emb, id, vec, cents, cells, m, dsub,
+    ivfPqAdc(emb, id, vec, kmeansCentroids(emb, id, vec, kCoarse, coarseIters),
       resid => pqCodebooksTrained(resid, col("id"), col("res"),
         m, dsub, ksub, pqIters),
-      nprobe, nQueries, k)
-  }
+      nprobe, m, dsub, nQueries, k)
 
-  /** Shared IVF-PQ serving tail: residual computation, residual-codebook
-    * build (`mkCodebook` over the `(id, cell, res)` frame), PQ encode,
-    * per-(query, probed-cell) residual LUTs, byte-code equi-join scan,
-    * top-k. `cents` = `(c_id, c_v, c_n2)`, `cells` = `(id, v, n2, cell)`
-    * assigned against the SAME centroids. */
-  private def ivfPqAdcTail(emb: DataFrame, id: Column, vec: Column,
-                           cents: DataFrame, cells: DataFrame,
-                           m: Int, dsub: Int,
-                           mkCodebook: DataFrame => DataFrame,
-                           nprobe: Int, nQueries: Int, k: Int): DataFrame = {
+  /** The IVF-PQ body over a coarse centroid list: cell assignment,
+    * residuals, residual-codebook build (`mkCodebook` over the
+    * `(id, cell, res)` frame), PQ encode, per-(query, probed-cell)
+    * residual LUTs, byte-code equi-join scan, top-k. */
+  private def ivfPqAdc(emb: DataFrame, id: Column, vec: Column,
+                       coarse: Seq[(Int, Seq[Double])],
+                       mkCodebook: DataFrame => DataFrame,
+                       nprobe: Int, m: Int, dsub: Int,
+                       nQueries: Int, k: Int): DataFrame = {
+    ensureRegistered(emb)
+    val cents = centroidFrame(emb.sparkSession, coarse) // (c_id, c_v, cn2)
+    val cells = ivfAssign(emb, id, vec, coarse) // (id, v, n2, cell)
     val resid = cells.join(broadcast(cents), col("cell") === col("c_id"))
       .select(col("id"), col("cell"),
         zip_with(transform(col("v"), x => x.cast("double")), col("c_v"),
@@ -874,13 +794,11 @@ object Similarity {
       .join(cells.select(col("id"), col("cell")), Seq("id"))
     // query side: nprobe nearest coarse cells, one residual LUT per
     // (query, probed cell)
-    val qprobe = emb.where(id < nQueries)
-      .select(id.as("q_id"), transform(vec, x => x.cast("double")).as("q_v"))
-      .join(broadcast(cents))
-      .withColumn("pr", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy((col("c_n2") - lit(2.0) * dot(col("q_v"), col("c_v"))).asc,
-          col("c_id").asc)))
-      .where(col("pr") <= nprobe)
+    val qprobe = rankPerQuery(emb.where(id < nQueries)
+        .select(id.as("q_id"), transform(vec, x => x.cast("double")).as("q_v"))
+        .join(broadcast(cents)),
+        nprobe, (col("cn2") - lit(2.0) * dot(col("q_v"), col("c_v"))).asc,
+        col("c_id").asc)
       .select(col("q_id"), col("c_id").as("q_cell"),
         zip_with(col("q_v"), col("c_v"), (a, b) => a - b).as("q_res"))
     val lut = qprobe.select(col("q_id"), col("q_cell"),
@@ -905,12 +823,7 @@ object Similarity {
       .where(col("q_id") =!= col("n_id"))
       .groupBy(col("q_id"), col("n_id"))
       .agg(sum(col("pd")).cast("double").as("est"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("est").asc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        round(col("est"), 4).as("est"))
+    topK(scored, "est", descending = false, k)
   }
 
   /** ADC + exact rerank — the standard PQ serving recipe: the compressed
@@ -939,11 +852,6 @@ object Similarity {
       .select(col("q_id"), col("n_id"),
         (col("q_n2") + col("n2") - lit(2.0) * dot(col("q_v"), col("v")))
           .as("d2"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("d2").asc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"),
-        round(col("d2"), 4).as("d2"))
+    topK(scored, "d2", descending = false, k)
   }
 }

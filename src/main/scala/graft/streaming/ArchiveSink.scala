@@ -111,6 +111,9 @@ object ArchiveSink {
     val incoming = batch.withColumn(PartCol, bucket).withColumn("__new", lit(1))
     val touched = incoming.select(col(PartCol)).distinct()
       .collect().map(_.getInt(0)).sorted
+    // An empty batch changes nothing: writing the marker and an empty dir
+    // for it would leave a new archive no later upsert can read.
+    if (touched.isEmpty) return
     val all =
       if (fs.exists(cur))
         spark.read.parquet(dir)

@@ -78,17 +78,37 @@ class SessionSpec extends AnyFunSuite {
     assert(confs("spark.sql.shuffle.partitions") === "2")
   }
 
-  test("no session builder outside graft/Session.scala") {
-    val needle = "SparkSession" + ".builder"
+  /** The `.scala` files under `root` (relative to the repository root). */
+  private def sources(root: String): Seq[File] = {
     def files(d: File): Seq[File] =
       Option(d.listFiles).toSeq.flatten.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val roots = Seq("src/main/scala", "src/test/scala").map(new File(_))
-    assert(roots.forall(_.isDirectory), "run from the repository root")
-    val offenders = roots.flatMap(files)
-      .filter(_.getName.endsWith(".scala"))
+    val d = new File(root)
+    assert(d.isDirectory, "run from the repository root")
+    files(d).filter(_.getName.endsWith(".scala"))
+  }
+
+  private def text(f: File): String = new String(Files.readAllBytes(f.toPath), "UTF-8")
+
+  test("no session builder outside graft/Session.scala") {
+    val needle = "SparkSession" + ".builder"
+    val offenders = (sources("src/main/scala") ++ sources("src/test/scala"))
       .filterNot(_.getPath.endsWith("graft/Session.scala"))
-      .filter(f => new String(Files.readAllBytes(f.toPath), "UTF-8").contains(needle))
+      .filter(text(_).contains(needle))
     assert(offenders.isEmpty, s"build the session with graft.Session: ${offenders.mkString(", ")}")
+  }
+
+  test("the only mains in src/main are Bench, Verify, Explain, MakeScale and PlantedCheck") {
+    // an investigation goes through perfbench/run.py, not a new main
+    val objectDecl = """\bobject\s+(\w+)""".r
+    val mainDecl = """\bdef\s+main\s*\(""".r
+    val mains = sources("src/main/scala").flatMap { f =>
+      val src = text(f)
+      val objects = objectDecl.findAllMatchIn(src).map(m => m.start -> m.group(1)).toSeq
+      mainDecl.findAllMatchIn(src).map { m =>
+        objects.takeWhile(_._1 < m.start).lastOption.fold(f.getName)(_._2)
+      }
+    }
+    assert(mains.sorted === Seq("Bench", "Explain", "MakeScale", "PlantedCheck", "Verify"))
   }
 }
 

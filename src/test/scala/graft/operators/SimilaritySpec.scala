@@ -73,12 +73,56 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ivf: every vector lands in exactly one cell, centroids in their own") {
-    val cells = Similarity.ivfAssign(emb, col("vec_id"), col("embedding"), 2)
+    val cells = Similarity.ivfAssign(emb, col("vec_id"), col("embedding"),
+        Similarity.firstKCentroids(emb, col("vec_id"), col("embedding"), 2))
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("cell")).toMap
     assert(cells.size == 5)
     assert(cells(0L) == 0L && cells(1L) == 1L) // centroids own their cells
     assert(cells(4L) == 0L) // colinear with centroid 0
     assert(cells(3L) == 1L) // (-1,0,0): dist² to c0=(1,0,0) is 4, to c1=(0,1,0) is 2
+  }
+
+  test("ivfAssign's nearest_centroid kernel equals the broadcast-join " +
+      "struct-min it replaced") {
+    // the replaced form, kept here as the reference: every vector fans
+    // out against every centroid, argmin = min(struct(s, c_id)) with s
+    // ordered nulls-first
+    def viaJoin(df: org.apache.spark.sql.DataFrame,
+                cents: Seq[(Int, Seq[Double])]): Map[Long, Long] = {
+      val cdf = cents.map { case (c, v) => (c, v, v.map(x => x * x).sum) }
+        .toDF("c_id", "c_v", "cn2")
+      df.select(col("vec_id").as("id"), col("embedding").as("v"))
+        .join(broadcast(cdf))
+        .groupBy(col("id"))
+        .agg(min(struct(
+          (col("cn2") - lit(2.0) * Similarity.dot(col("v"), col("c_v"))).as("s"),
+          col("c_id").as("c"))).as("m"))
+        .select(col("id"), col("m.c").cast("long"))
+        .as[(Long, Long)].collect().toMap
+    }
+    def viaKernel(df: org.apache.spark.sql.DataFrame,
+                  cents: Seq[(Int, Seq[Double])]): Map[Long, Long] =
+      Similarity.ivfAssign(df, col("vec_id"), col("embedding"), cents)
+        .select("id", "cell").as[(Long, Long)].collect().toMap
+    def f(xs: Float*): Option[Seq[Option[Float]]] = Some(xs.map(Option(_)))
+    val data = Seq[(Long, Option[Seq[Option[Float]]])](
+      (0L, f(1.0f, 0.0f, 0.0f)),
+      (1L, f(0.0f, 1.0f, 0.0f)),
+      (2L, f(1.0f, 1.0f, 0.0f)),  // ties centroids 1 and 3 on s = -1
+      (3L, f(-1.0f, 0.5f, 0.0f)),
+      (4L, f(2.0f, 0.0f, 0.25f)),
+      (5L, None),                  // null vector
+      (6L, Some(Seq(Some(1.0f), None, Some(0.0f))))  // null element
+    ).toDF("vec_id", "embedding")
+    // explicit centroids, deliberately out of id order
+    val cents = Seq(3 -> Seq(1.0, 0.0, 0.0), 1 -> Seq(0.0, 1.0, 0.0),
+      2 -> Seq(-1.0, 0.0, 0.0))
+    val ref = viaJoin(data, cents)
+    assert(ref.size == 7 && ref(2L) == 1L && ref(5L) == 1L && ref(6L) == 1L)
+    assert(viaKernel(data, cents) === ref)
+    // empty centroid list: the inner join assigned no rows, nor does the kernel
+    assert(viaJoin(data, Nil).isEmpty)
+    assert(viaKernel(data, Nil) === viaJoin(data, Nil))
   }
 
   test("annIvf cosines agree with brute force on shared candidates") {
@@ -241,9 +285,9 @@ class SimilaritySpec extends AnyFunSuite {
     assert(xs.head < -9.0 && xs.last > 9.0,
       s"one centroid per planted cluster, got $cents")
     // assignment under trained centroids = the planted split
-    val cells = Similarity.ivfAssignWith(data, col("vec_id"),
+    val cells = Similarity.ivfAssign(data, col("vec_id"),
         col("embedding"), cents)
-      .select("id", "cell").as[(Long, Int)].collect().toMap
+      .select("id", "cell").as[(Long, Long)].collect().toMap
     assert((0L to 3L).map(cells).toSet.size == 1)
     assert((4L to 7L).map(cells).toSet.size == 1)
     assert(cells(0L) != cells(4L))
@@ -273,9 +317,9 @@ class SimilaritySpec extends AnyFunSuite {
     assert(rTrained == 1.0,
       s"trained IVF must fully recover planted-cluster neighbours, got $rTrained")
     // trained cells are balanced: 8 per cell
-    val counts = Similarity.ivfAssignWith(data, col("vec_id"), col("embedding"),
+    val counts = Similarity.ivfAssign(data, col("vec_id"), col("embedding"),
         Similarity.kmeansCentroids(data, col("vec_id"), col("embedding"), 4, 10))
-      .groupBy("cell").count().as[(Int, Long)].collect().map(_._2)
+      .groupBy("cell").count().as[(Long, Long)].collect().map(_._2)
     assert(counts.length == 4 && counts.forall(_ == 8L))
   }
 
@@ -418,7 +462,7 @@ class SimilaritySpec extends AnyFunSuite {
     // clusters (12 vectors each), no mega-cell
     val cents = Similarity.kmeansCentroids(data, col("vec_id"),
       col("embedding"), 8, 3)
-    val sizes = Similarity.ivfAssignWith(data, col("vec_id"),
+    val sizes = Similarity.ivfAssign(data, col("vec_id"),
         col("embedding"), cents)
       .groupBy("cell").count().collect().map(_.getLong(1))
     assert(sizes.length == 8 && sizes.max == 12,

@@ -170,4 +170,28 @@ class ShinglePairSpec extends AnyFunSuite {
       col("ids"), lit(b), lit(0.0)).as(Seq("p1", "p2"))).count()
     assert(total === arrays.map(a => a.length.toLong * (a.length - 1) / 2).sum)
   }
+
+  test("size cut epsilon: no pair it drops can round to the threshold " +
+      "(every 1 <= n1 <= n2 <= 2000, off-grid thresholds)") {
+    // i = n1 is the largest intersection a pair of sizes (n1, n2) can
+    // have, so jac = i/(n1+n2−i) = n1/n2 is its best case. Whenever that
+    // rounds (HALF_UP, 4 decimals, as Spark's `round` on a double) to
+    // ≥ t, the generator's test `lo >= minRatio * hi` with q26's
+    // minRatio = t − 5.1e-5 must keep the pair. The case above feeds the
+    // generator the ratio it filters on, so only this sweep can catch an
+    // epsilon that is unsafe for some t or size.
+    val dropped = for {
+      t <- Seq(0.3333, 0.33335, 0.5, 0.8571, 0.9)
+      minRatio = t - 5.1e-5
+      n2 <- 1 to 2000
+      n1 <- 1 to n2
+      if !(n1 >= minRatio * n2)
+      i = n1
+      jac = i.toDouble / (n1 + n2 - i)
+      if BigDecimal(jac).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+        .toDouble >= t
+    } yield (t, n1, n2)
+    assert(dropped.isEmpty,
+      s"cut drops pairs that reach t: ${dropped.take(5).mkString(", ")}")
+  }
 }

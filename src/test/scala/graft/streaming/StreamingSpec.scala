@@ -25,6 +25,19 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.toSeq == Seq((1L, 10L, 1.0), (2L, 20L, 2.5), (3L, 10L, 3.0)))
   }
 
+  test("archive upsert: an empty first batch leaves no archive, the next upsert reads") {
+    // the first micro-batch of a stream is often empty; upserting it into
+    // a new archive must not leave a directory the next upsert cannot read
+    val dir = Files.createTempDirectory("graft_test_archive_empty_").toString + "/t"
+    ArchiveSink.upsert(Seq.empty[(Long, Long, Double)].toDF("id", "v", "x"),
+      dir, Seq("id"), "v")
+    assert(!new java.io.File(dir).exists())
+    ArchiveSink.upsert(Seq((1L, 10L, 1.0)).toDF("id", "v", "x"), dir, Seq("id"), "v")
+    val out = ArchiveSink.read(spark, dir).select("id", "v", "x")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(out.toSeq == Seq((1L, 10L, 1.0)))
+  }
+
   test("archive upsert: incoming batch wins version ties") {
     val dir = Files.createTempDirectory("graft_test_archive2_").toString + "/t"
     ArchiveSink.upsert(Seq((1L, 10L, 1.0)).toDF("id", "v", "x"), dir, Seq("id"), "v")
