@@ -135,6 +135,28 @@ object Replay {
       col("staticRun").as("static_run"), col("moved"))
   }
 
+  /** Bucket count of the q36 replay archive for a corpus of `bytes` on
+    * `cores` (r14, VERDICT r13 item 6; guide §6 file sizing): target
+    * 256 MiB per bucket file, PLUS a write-parallelism floor — the
+    * upsert's staged write is one task per touched bucket (ArchiveSink
+    * clusters by bucket), so too few buckets serialize the write on a
+    * many-core box: min(cores, one bucket per 8 MiB), inactive once
+    * volume/256 MiB exceeds the core count. Both r14 mis-derivations were
+    * CAUGHT BY MEASUREMENT and corrected: the stateParts 4-MiB divisor
+    * gave 38 buckets at sf1 (1.77× slower — per-file constants), a pure
+    * 256-MiB divisor gave 4 (7.12 vs 5.92 s against 16 — write
+    * serialized). This form: sf0.1 → 4 (A/B: 4 beats 16, 2.63 vs 2.85),
+    * sf1 → 19 (≈ the 16 that beats 4, 5.92 vs 7.12), sf10 → 32. The cap,
+    * max(512, one bucket per GiB), bounds the bucket count on small
+    * corpora without letting bucket files outgrow 1 GiB: a fixed 512 cap
+    * made them about 195 GB each at 100 TB. */
+  def archiveBuckets(bytes: Long, cores: Int): Int = {
+    val want = math.max(4L,
+      math.max(bytes / (256L << 20), math.min(cores.toLong, bytes / (8L << 20))))
+    val cap = math.max(512L, (bytes + (1L << 30) - 1) / (1L << 30))
+    math.min(cap, want).toInt
+  }
+
   /** Replays the events table through a streaming upsert archive, then
     * returns the archived rows (ts normalized like Tables does). */
   def replayEventsToArchive(spark: SparkSession, sfDir: String): DataFrame = {
@@ -155,26 +177,12 @@ object Replay {
     val src = java.nio.file.Paths.get(s"$sfDir/events.parquet")
     Files.createSymbolicLink(inDir.resolve("replay-0.parquet"), src)
     Files.createSymbolicLink(inDir.resolve("replay-1.parquet"), src)
-    // Bucket count derived from corpus VOLUME (r14, VERDICT r13 item 6;
-    // guide §6 file sizing): target 256 MiB per bucket file, PLUS a
-    // write-parallelism floor — the upsert's staged write is one task
-    // per touched bucket (ArchiveSink clusters by bucket), so too few
-    // buckets serialize the write on a many-core box: min(cores, one
-    // bucket per 8 MiB), inactive once volume/256 MiB exceeds the core
-    // count. Both r14 mis-derivations were CAUGHT BY MEASUREMENT and
-    // corrected: the stateParts 4-MiB divisor gave 38 buckets at sf1
-    // (1.77× slower — per-file constants), a pure 256-MiB divisor gave
-    // 4 (7.12 vs 5.92 s against 16 — write serialized). This form:
-    // sf0.1 → 4 (A/B: 4 beats 16, 2.63 vs 2.85), sf1 → 19 (≈ the 16
-    // that beats 4, 5.92 vs 7.12), sf10 → 32, 100 TB → the 512 clamp.
     // Creation-time only: an EXISTING archive's stored marker count
     // always wins inside upsert, so layouts never shift under a reader
     // (the replay's archive dir is fresh per run). Derived once per
     // replay, not per micro-batch: the corpus does not change under it.
-    val bytes = graft.Session.dirBytes(sfDir)
-    val cores = spark.sparkContext.defaultParallelism
-    val buckets = math.min(512L, math.max(4L,
-      math.max(bytes / (256L << 20), math.min(cores.toLong, bytes / (8L << 20))))).toInt
+    val buckets = archiveBuckets(graft.Session.dirBytes(sfDir),
+      spark.sparkContext.defaultParallelism)
     val stream = spark.readStream
       .schema(batchSchema)
       .option("maxFilesPerTrigger", "1")

@@ -1,0 +1,165 @@
+#!/usr/bin/env python3
+"""Alternating parent/change benchmark pairs for one workload.
+
+    python3 tools/abpairs.py --parent <git-ref> --workload <name> \\
+        --pairs N --seed-from S [--parent-dir DIR] [--out FILE]
+
+Run from the root of the working tree. The parent commit is exported with
+``git archive`` into ``--parent-dir`` (default: a new directory under the
+system temp dir; an export of the same commit is reused, with its
+``.bench_build``). Pair i runs ``python3 perfbench/run.py --workload <name>
+--seed S+i --seconds 20 --trace 0`` once in the parent export and once in
+the working tree, one run at a time; the parent goes first in even pairs
+and second in odd ones. Every result line is appended to ``--out`` as
+``{"pair", "seed", "side", "result"}``. At the end it prints, per
+end-to-end metric of ``BENCHMARK.json``, each side's median and quartiles,
+the change against the parent, the parent's IQR/median and the pairs the
+change won (ties count for neither). Exits 1 if any run is not
+``correct: true`` or printed no result line. Benchmark files are only read.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+import tempfile
+
+ROOT = os.getcwd()
+
+
+def quartiles(xs):
+    """(q1, median, q3) of `xs`, inclusive method."""
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, med, q3
+
+
+def summarize(records, better):
+    """Per-metric summary of `records` ({"pair", "side", "result"} dicts)
+    for the metrics in `better` (name -> "lower" | "higher"). Only pairs
+    with a result on both sides count."""
+    by_pair = {}
+    for r in records:
+        by_pair.setdefault(r["pair"], {})[r["side"]] = r["result"]
+    pairs = [p for _, p in sorted(by_pair.items()) if "parent" in p and "change" in p]
+    out = {}
+    for name, direction in better.items():
+        both = [(p["parent"]["metrics"][name]["value"], p["change"]["metrics"][name]["value"])
+                for p in pairs
+                if name in p["parent"].get("metrics", {}) and name in p["change"].get("metrics", {})]
+        if not both:
+            continue
+        par = [a for a, _ in both]
+        chg = [b for _, b in both]
+        pq1, pmed, pq3 = quartiles(par)
+        cq1, cmed, cq3 = quartiles(chg)
+        sign = -1 if direction == "lower" else 1
+        wins = sum(1 for a, b in both if sign * (b - a) > 0)
+        out[name] = {
+            "pairs": len(both),
+            "parent": {"q1": pq1, "median": pmed, "q3": pq3},
+            "change": {"q1": cq1, "median": cmed, "q3": cq3},
+            "change_frac": (cmed - pmed) / pmed if pmed else None,
+            "parent_iqr_frac": (pq3 - pq1) / pmed if pmed else None,
+            "wins": wins,
+            # the gain rule: 9 in 10 pairs won and a median move beyond the parent's IQR
+            "claimable": wins * 10 >= 9 * len(both) and abs(cmed - pmed) > pq3 - pq1,
+        }
+    return out
+
+
+def format_summary(summary):
+    def pct(x):
+        return "n/a" if x is None else f"{100 * x:+.1f} %"
+    lines = [f"{'metric':<12} {'parent median [q1, q3]':<30} {'change median [q1, q3]':<30} "
+             f"{'change':>9} {'par IQR/med':>11} {'wins':>7}"]
+    for name, s in summary.items():
+        p, c = s["parent"], s["change"]
+        lines.append(
+            f"{name:<12} {p['median']:<9.4g} [{p['q1']:.4g}, {p['q3']:.4g}]".ljust(44)
+            + f"{c['median']:<9.4g} [{c['q1']:.4g}, {c['q3']:.4g}]".ljust(31)
+            + f"{pct(s['change_frac']):>9} {s['parent_iqr_frac'] or 0:>11.3f} "
+            + f"{s['wins']:>3}/{s['pairs']:<3}" + ("  claimable" if s["claimable"] else ""))
+    return "\n".join(lines)
+
+
+def export_parent(ref, parent_dir):
+    sha = subprocess.run(["git", "rev-parse", "--verify", f"{ref}^{{commit}}"], cwd=ROOT,
+                         check=True, capture_output=True, text=True).stdout.strip()
+    stamp = os.path.join(parent_dir, ".abpairs-commit")
+    if os.path.exists(stamp) and open(stamp).read().strip() == sha:
+        return sha
+    if os.path.exists(parent_dir) and os.listdir(parent_dir):
+        sys.exit(f"{parent_dir} is not empty and holds no export of {sha}")
+    os.makedirs(parent_dir, exist_ok=True)
+    archive = subprocess.Popen(["git", "archive", sha], cwd=ROOT, stdout=subprocess.PIPE)
+    subprocess.run(["tar", "-x", "-C", parent_dir], stdin=archive.stdout, check=True)
+    if archive.wait() != 0:
+        sys.exit(f"git archive {sha} failed")
+    with open(stamp, "w") as f:
+        f.write(sha + "\n")
+    return sha
+
+
+def run_once(side_root, workload, seed, log):
+    env = dict(os.environ)
+    env.pop("CARGO_TARGET_DIR", None)  # each side builds into its own .bench_build
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+           "--seconds", "20", "--trace", "0"]
+    r = subprocess.run(cmd, cwd=side_root, env=env, stdout=subprocess.PIPE,
+                       stderr=log, stdin=subprocess.DEVNULL, text=True)
+    for line in reversed(r.stdout.strip().splitlines()):
+        try:
+            return json.loads(line)
+        except ValueError:
+            continue
+    return None
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--parent", required=True, help="git ref of the parent commit")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", type=int, required=True)
+    ap.add_argument("--seed-from", type=int, required=True)
+    ap.add_argument("--parent-dir", help="where to export the parent (reused if it holds it)")
+    ap.add_argument("--out", help="JSON-lines file of every result (appended)")
+    args = ap.parse_args()
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+    parent_dir = args.parent_dir or tempfile.mkdtemp(prefix="abpairs-parent-")
+    sha = export_parent(args.parent, parent_dir)
+    out = args.out or f"abpairs-{args.workload}-s{args.seed_from}.jsonl"
+    log_path = out + ".log"
+    print(f"parent {sha[:12]} in {parent_dir}; results -> {out}, run logs -> {log_path}",
+          file=sys.stderr, flush=True)
+    records, bad = [], 0
+    with open(out, "a") as res, open(log_path, "a") as log:
+        for i in range(args.pairs):
+            seed = args.seed_from + i
+            order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+            for side in order:
+                root = parent_dir if side == "parent" else ROOT
+                result = run_once(root, args.workload, seed, log)
+                if result is None or result.get("correct") is not True:
+                    bad += 1
+                rec = {"pair": i, "seed": seed, "side": side, "result": result}
+                res.write(json.dumps(rec) + "\n")
+                res.flush()
+                print(json.dumps(rec), flush=True)
+                if result is not None:
+                    records.append(rec)
+    print(format_summary(summarize(records, better)))
+    for side in ("parent", "change"):
+        att = sum(r["result"].get("attempted", 0) for r in records if r["side"] == side)
+        fail = sum(r["result"].get("failed", 0) for r in records if r["side"] == side)
+        print(f"{side}: {fail} of {att} operations failed")
+    if bad:
+        print(f"{bad} run(s) not correct or without a result line", file=sys.stderr)
+        sys.exit(1)
+
+
+if __name__ == "__main__":
+    main()
