@@ -99,7 +99,8 @@ object SparkEntry {
     * every 10th vector — integer-rational deltas, bit-identical in both
     * engines — giving true near-dups spread around cos 0.9 (the raw
     * embeddings are near-orthogonal, max pair cos 0.51). Twin ids sit
-    * above the data-derived stride max(id)+1, one eager job (r13: the
+    * above the data-derived stride max(id)+1, one eager job per input
+    * version ([[StatsCatalog]]) (r13: the
     * old fixed +10000 COLLIDED with base ids once the corpus passed 10k
     * vectors, and the sketch-prune mirror joins band codes BY ID, which
     * double-counts hamming sums under id duplication — caught by the
@@ -109,7 +110,8 @@ object SparkEntry {
                                 isBench: Boolean = false): DataFrame = {
     val base = Tables.embeddings(s, d).select(
       col("vec_id").cast("long").as("id"), col("embedding").as("v"))
-    val stride = base.agg(max(col("id"))).head().getLong(0) + 1
+    val stride =
+      StatsCatalog.collect(base.agg(max(col("id")))).head.getLong(0) + 1
     def flag(twin: Boolean): Seq[Column] =
       if (isBench) Seq(lit(twin).as("is_bench")) else Nil
     val twins = base.where(col("id") % 10 === 0)

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver's synthetic star-schema tables (TESTDATA.md).
@@ -7,14 +9,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * At cluster scale the archive would be a partitioned parquet/Delta table;
   * here each table is one parquet file. Filters and projections applied by
   * callers push down to the scan (verify with `.explain`: `PushedFilters`).
+  * A table's schema is inferred from its parquet footers (one Spark job)
+  * on the first read of each version of its files only; later reads pin
+  * it from [[StatsCatalog]].
   */
 object Tables {
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** The driver's events table stores TIMESTAMP(NANOS) parquet, which
+    * Spark only reads via the nanosAsLong legacy conf (as LongType ns);
+    * it must be set before schema inference. A session that refuses the
+    * runtime set reads without it. */
+  private[graft] def readNanosAsLong(spark: SparkSession): Unit =
+    if (!spark.conf.getOption(NanosAsLong).contains("true"))
+      try spark.conf.set(NanosAsLong, "true")
+      catch { case NonFatal(_) => }
+
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // The driver's events table stores TIMESTAMP(NANOS) parquet, which
-    // Spark only reads via the nanosAsLong legacy conf (as LongType ns).
-    try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => }
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    readNanosAsLong(spark)
+    val path = s"$sfDir/$name.parquet"
+    var inferred: Option[DataFrame] = None
+    val schema = StatsCatalog.schema(spark, path) {
+      val d = spark.read.parquet(path)
+      inferred = Some(d)
+      d.schema
+    }
+    val df = inferred.getOrElse(spark.read.schema(schema).parquet(path))
     // Normalize any ns-long "ts" back to a microsecond TIMESTAMP (integer
     // DIV: int64 ns exceeds double's exact range, a / 1000 would skew).
     df.schema.find(f => f.name == "ts" &&

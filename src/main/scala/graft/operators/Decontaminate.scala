@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.StatsCatalog
 import graft.functions.TextFunctions
 
 /** Benchmark decontamination: flag training documents that share word
@@ -75,7 +76,7 @@ object Decontaminate {
     val base = baseFrame(emb, id, vec, isBenchmark)
     // planning statistic (bounded: one aggregate row), same contract as
     // cosineNearDupPairsLshAuto's corpus count
-    val nBench = base.where(col("is_bench")).count()
+    val nBench = StatsCatalog.count(base.where(col("is_bench")))
     // Surface the branch: an exact-audit caller must be able to see
     // when the gate routed to the probabilistic-recall path (ADVICE
     // r11) — the oracle twin mirrors this gate with a hard error().
@@ -132,7 +133,8 @@ object Decontaminate {
   private def embedOverlapLshFromBase(base: DataFrame, threshold: Double,
                                       targetRecall: Double = 0.9,
                                       bucketCap: Int = 10000): DataFrame = {
-    val nTrain = base.where(!col("is_bench")).count() // planning statistic
+    // planning statistic
+    val nTrain = StatsCatalog.count(base.where(!col("is_bench")))
     val (p, bands) = Similarity.lshPairKnobs(nTrain, threshold, targetRecall)
     val nPlanes = p * bands
     // Planes come from the TRAINING side only (ADVICE r11: never derive
@@ -143,9 +145,9 @@ object Decontaminate {
     // trace (zero planes → zero contamination hits). Rank selection is
     // a bounded global top-k + driver collect (p·bands ≈ log² n rows —
     // the planning-statistic stance); shortfall fails loudly.
-    val planeRows = base.where(!col("is_bench"))
+    val planeRows = StatsCatalog.collect(base.where(!col("is_bench"))
       .orderBy(col("id").asc).limit(nPlanes)
-      .select(col("id"), col("v")).collect()
+      .select(col("id"), col("v")))
     require(planeRows.length == nPlanes,
       s"embedOverlapLsh: training side has only ${planeRows.length} " +
         s"vectors for $nPlanes SRP planes (p=$p bands=$bands)")

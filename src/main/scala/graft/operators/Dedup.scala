@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.StatsCatalog
 import graft.functions.TextFunctions._
 
 /** Document deduplication for training-data pipelines: exact (hash
@@ -599,7 +600,7 @@ object Dedup {
 
   def semDedup(emb: DataFrame, id: Column, vec: Column,
                threshold: Double): DataFrame = {
-    val n = emb.count()
+    val n = StatsCatalog.count(emb)
     val k = semDedupK(n)
     val cells = Similarity.ivfAssign(emb, id, vec,
       Similarity.firstKCentroids(emb, id, vec, k))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.StatsCatalog
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`): brute-force cosine top-k as the exactness baseline,
   * plus a signed-random-projection LSH bucketed variant as the scale path.
@@ -91,7 +93,8 @@ object Similarity {
     * against, never the production path.
     *
     * Self-protecting (r13, VERDICT r12 item 6): the O(n²) plan is
-    * guarded by `maxExactRows` — one planning-statistic count; above
+    * guarded by `maxExactRows` — one planning-statistic count, once per
+    * input version ([[graft.StatsCatalog]]), checked on every call; above
     * the bound the call FAILS with a message naming
     * [[cosineNearDupPairsLshAuto]] rather than silently launching a
     * quadratic that cannot survive scale. An error (not an auto-route)
@@ -105,7 +108,7 @@ object Similarity {
                          maxExactRows: Long = 65536): DataFrame = {
     ensureRegistered(emb)
     val base = emb.select(id.as("id"), vec.as("v"))
-    val n = base.count()
+    val n = StatsCatalog.count(base)
     require(n <= maxExactRows,
       s"cosineNearDupPairs: $n rows exceed the exact-quadratic bound " +
         s"$maxExactRows (~${n * n / 2} pair evaluations). Use " +
@@ -130,8 +133,8 @@ object Similarity {
     ensureRegistered(emb)
     val base = emb.select(block.as("label"), id.as("id"), vec.as("v"),
       norm2(vec).as("n2"))
-    val biggest = base.groupBy(col("label")).agg(count(lit(1)).as("n"))
-      .agg(max(col("n"))).head()
+    val biggest = StatsCatalog.collect(base.groupBy(col("label"))
+      .agg(count(lit(1)).as("n")).agg(max(col("n")))).head
     val maxB = if (biggest.isNullAt(0)) 0L else biggest.getLong(0)
     require(maxB <= maxBlockRows,
       s"cosineNearDupPairsBlocked: largest block has $maxB rows, over the " +
@@ -320,8 +323,8 @@ object Similarity {
     * zeroes code bits and collapses recall with no trace. */
   private def collectPlanes(base: DataFrame,
                             nPlanes: Int): Array[Array[Double]] = {
-    val rows = base.where(col("id") < nPlanes)
-      .select(col("id").cast("long"), col("v")).collect()
+    val rows = StatsCatalog.collect(base.where(col("id") < nPlanes)
+      .select(col("id").cast("long"), col("v")))
     require(rows.length == nPlanes,
       s"SRP planes: expected the first $nPlanes corpus vectors " +
         s"(ids 0..${nPlanes - 1}), found ${rows.length} — a partial plane " +
@@ -353,8 +356,8 @@ object Similarity {
                                 threshold: Double, targetRecall: Double = 0.9,
                                 targetBucket: Int = 8,
                                 bucketCap: Int = 1000): DataFrame = {
-    val (p, bands) = lshPairKnobs(emb.count(), threshold, targetRecall,
-      targetBucket)
+    val (p, bands) = lshPairKnobs(StatsCatalog.count(emb), threshold,
+      targetRecall, targetBucket)
     cosineNearDupPairsLsh(emb, id, vec, threshold, p, bands, bucketCap)
   }
 
@@ -382,8 +385,8 @@ object Similarity {
     * usable quantizer) requires dense centroids. */
   def firstKCentroids(emb: DataFrame, id: Column, vec: Column,
                       k: Int): Seq[(Int, Seq[Double])] =
-    emb.select(id.cast("long").as("id"), vec.as("v"))
-      .where(col("id") < k).collect()
+    StatsCatalog.collect(emb.select(id.cast("long").as("id"), vec.as("v"))
+        .where(col("id") < k))
       .map(r => (Math.toIntExact(r.getLong(0)),
         planeVector(r, "IVF centroid").toSeq))
       .sortBy(_._1).toSeq

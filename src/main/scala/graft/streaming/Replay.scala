@@ -161,9 +161,7 @@ object Replay {
     * returns the archived rows (ts normalized like Tables does). */
   def replayEventsToArchive(spark: SparkSession, sfDir: String): DataFrame = {
     // events.parquet is TIMESTAMP(NANOS); same legacy conf as Tables.apply
-    // (must be set before schema inference, not only before the read).
-    try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => }
+    Tables.readNanosAsLong(spark)
     val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
     // Fresh run: clear the previous run's dirs (also resets the stream
     // checkpoint — reusing it would make the source skip the input files).

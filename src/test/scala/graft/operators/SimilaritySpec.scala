@@ -520,4 +520,35 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(viaOp === inline)
   }
+
+  test("exact and blocked guards still refuse at call time when the statistic is memoised") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_test_guards")
+      .toString + "/corpus"
+    (0L until 20L).map(i =>
+        (i, i % 4, Array(math.cos(i * 0.3), math.sin(i * 0.3), 0.5)))
+      .toDF("vec_id", "label", "v").write.parquet(dir)
+    val corpus = spark.read.parquet(dir)
+    def refusals(): (String, String) = (
+      intercept[IllegalArgumentException] {
+        Similarity.cosineNearDupPairs(corpus, col("vec_id"), col("v"),
+          0.9, maxExactRows = 10)
+      }.getMessage,
+      intercept[IllegalArgumentException] {
+        Similarity.cosineNearDupPairsBlocked(corpus, col("label"),
+          col("vec_id"), col("v"), 0.9, maxBlockRows = 3)
+      }.getMessage)
+    val first = refusals()
+    // the second call's statistics come from graft.StatsCatalog: no job
+    var second = ("", "")
+    assert(org.apache.spark.TestAccess.jobsDuring(spark.sparkContext) {
+      second = refusals()
+    } == 0)
+    assert(second == first)
+    assert(second._1.contains("20 rows exceed"))
+    assert(second._2.contains("largest block has 5 rows"))
+    // a raised bound on the memoised statistic lets the same call run
+    assert(Similarity.cosineNearDupPairs(corpus, col("vec_id"), col("v"),
+      0.9, maxExactRows = 20).count() > 0)
+  }
 }

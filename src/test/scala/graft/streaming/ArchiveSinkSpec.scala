@@ -2,13 +2,11 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.TestAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -61,17 +59,7 @@ class ArchiveSinkSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       Seq(i, i + 1), new Timestamp(1700000000000L + i * 1000L)))
       .toDF("id", "v", "x", "tag", "ok", "pos", "xs", "at")
 
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    TestAccess.drainListeners(sc)
-    sc.addSparkListener(l)
-    try { f; TestAccess.drainListeners(sc) } finally sc.removeSparkListener(l)
-    jobs.get
-  }
+  private def jobsDuring(f: => Unit): Int = TestAccess.jobsDuring(spark.sparkContext)(f)
 
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()

@@ -14,7 +14,11 @@ and second in odd ones. Every result line is appended to ``--out`` as
 ``{"pair", "seed", "side", "result"}``. At the end it prints, per
 end-to-end metric of ``BENCHMARK.json``, each side's median and quartiles,
 the change against the parent, the parent's IQR/median and the pairs the
-change won (ties count for neither). Exits 1 if any run is not
+change won (ties count for neither). For a batch workload each record
+also carries the run's per-query median build and exec times, read from
+the samples of ``.bench_build/runs/<workload>-<seed>-t0/result.json``,
+and a second table prints their medians over the pairs per side, so a
+claim names the layer it moved. Exits 1 if any run is not
 ``correct: true`` or printed no result line. Benchmark files are only read.
 """
 import argparse
@@ -68,6 +72,59 @@ def summarize(records, better):
             "claimable": wins * 10 >= 9 * len(both) and abs(cmed - pmed) > pq3 - pq1,
         }
     return out
+
+
+LAYERS = ("build_s", "exec_s")
+
+
+def query_medians(result_path):
+    """{query: {"build_s", "exec_s"}}: the medians of a batch run's timed
+    samples that did not throw, from its result.json; None without samples."""
+    try:
+        with open(result_path) as f:
+            samples = json.load(f).get("samples")
+    except (OSError, ValueError):
+        return None
+    if not samples:
+        return None
+    by_query = {}
+    for s in samples:
+        if s.get("error") is None:
+            by_query.setdefault(s["query"], []).append(s)
+    return {q: {layer: statistics.median(s[layer] for s in ss) for layer in LAYERS}
+            for q, ss in by_query.items()}
+
+
+def summarize_queries(records):
+    """{query: {"parent"|"change": {"build_s", "exec_s"}}}: per side, the
+    median over pairs of each run's per-query medians. Only pairs where
+    both sides timed the query count."""
+    by_pair = {}
+    for r in records:
+        if r.get("queries"):
+            by_pair.setdefault(r["pair"], {})[r["side"]] = r["queries"]
+    per_query = {}
+    for p in by_pair.values():
+        if "parent" not in p or "change" not in p:
+            continue
+        for q in sorted(set(p["parent"]) & set(p["change"])):
+            for side in ("parent", "change"):
+                runs = per_query.setdefault(q, {}).setdefault(side, {})
+                for layer in LAYERS:
+                    runs.setdefault(layer, []).append(p[side][q][layer])
+    return {q: {side: {layer: statistics.median(xs) for layer, xs in layers.items()}
+                for side, layers in sides.items()}
+            for q, sides in per_query.items()}
+
+
+def format_queries(summary):
+    lines = [f"{'query':<24} {'build parent':>12} {'build change':>12} "
+             f"{'exec parent':>12} {'exec change':>12}"]
+    for q, s in sorted(summary.items()):
+        p, c = s["parent"], s["change"]
+        lines.append(f"{q:<24} {p['build_s']:>12.4f} {c['build_s']:>12.4f} "
+                     f"{p['exec_s']:>12.4f} {c['exec_s']:>12.4f}")
+    return "\n".join(lines)
 
 
 def format_summary(summary):
@@ -146,12 +203,19 @@ def main():
                 if result is None or result.get("correct") is not True:
                     bad += 1
                 rec = {"pair": i, "seed": seed, "side": side, "result": result}
+                queries = query_medians(os.path.join(
+                    root, ".bench_build", "runs", f"{args.workload}-{seed}-t0", "result.json"))
+                if queries:
+                    rec["queries"] = queries
                 res.write(json.dumps(rec) + "\n")
                 res.flush()
                 print(json.dumps(rec), flush=True)
                 if result is not None:
                     records.append(rec)
     print(format_summary(summarize(records, better)))
+    per_query = summarize_queries(records)
+    if per_query:
+        print(format_queries(per_query))
     for side in ("parent", "change"):
         att = sum(r["result"].get("attempted", 0) for r in records if r["side"] == side)
         fail = sum(r["result"].get("failed", 0) for r in records if r["side"] == side)

@@ -5,6 +5,7 @@
 import json
 import os
 import sys
+import tempfile
 import unittest
 
 sys.dont_write_bytecode = True
@@ -58,6 +59,49 @@ class SummaryTest(unittest.TestCase):
         s = abpairs.summarize(self.records(lines), BETTER)["ingest_eps"]
         self.assertEqual((s["pairs"], s["wins"]), (1, 1))  # pair 1 has no parent run
         self.assertEqual(s["parent"]["q1"], 10.0)
+
+
+def sample(query, build_s, exec_s, error=None):
+    return {"pass": 0, "query": query, "build_s": build_s, "exec_s": exec_s, "error": error}
+
+
+class QueryLayersTest(unittest.TestCase):
+    def test_run_medians_skip_failed_samples(self):
+        with tempfile.TemporaryDirectory() as d:
+            path = os.path.join(d, "result.json")
+            with open(path, "w") as f:
+                json.dump({"samples": [
+                    sample("q1", 0.30, 1.0), sample("q1", 0.10, 2.0), sample("q1", 0.20, 3.0),
+                    sample("q2", 0.05, 0.5),
+                    sample("q2", float("nan"), float("nan"), "IllegalArgumentException: x"),
+                ]}, f)
+            m = abpairs.query_medians(path)
+            self.assertEqual(m, {"q1": {"build_s": 0.20, "exec_s": 2.0},
+                                 "q2": {"build_s": 0.05, "exec_s": 0.5}})
+            with open(path, "w") as f:
+                json.dump({"samples": []}, f)  # an ingest run has none
+            self.assertIsNone(abpairs.query_medians(path))
+            self.assertIsNone(abpairs.query_medians(os.path.join(d, "missing.json")))
+
+    def test_medians_over_pairs_per_side(self):
+        def rec(pair, side, build_s, exec_s, queries=("q1",)):
+            return {"pair": pair, "side": side,
+                    "queries": {q: {"build_s": build_s, "exec_s": exec_s} for q in queries}}
+        records = [
+            rec(0, "parent", 0.40, 1.0), rec(0, "change", 0.05, 1.1),
+            rec(1, "change", 0.07, 0.9), rec(1, "parent", 0.50, 1.2),
+            rec(2, "parent", 0.45, 1.1), rec(2, "change", 0.06, 1.0, queries=("q1", "q9")),
+            rec(3, "parent", 9.0, 9.0),  # no change run: left out
+        ]
+        s = abpairs.summarize_queries(records)
+        self.assertEqual(set(s), {"q1"})  # q9 has no parent run
+        self.assertAlmostEqual(s["q1"]["parent"]["build_s"], 0.45)
+        self.assertAlmostEqual(s["q1"]["change"]["build_s"], 0.06)
+        self.assertAlmostEqual(s["q1"]["parent"]["exec_s"], 1.1)
+        self.assertAlmostEqual(s["q1"]["change"]["exec_s"], 1.0)
+        table = abpairs.format_queries(s)
+        self.assertIn("q1", table)
+        self.assertIn("0.4500", table)
 
 
 if __name__ == "__main__":
