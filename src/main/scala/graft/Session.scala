@@ -82,7 +82,14 @@ object Session {
       // "-1" as a system property forces shuffle joins, to test whether
       // an AQE broadcast→SMJ runtime transition is what a query pays at
       // the next decade.
-      "spark.sql.autoBroadcastJoinThreshold" -> "64m")
+      "spark.sql.autoBroadcastJoinThreshold" -> "64m",
+      // Generated-class cache (a static conf; Spark's default is 100
+      // entries). The ten corpus-curation queries compile about 171
+      // classes per pass under this session (local mode compiles each
+      // whole-stage class twice, from a driver and an executor thread):
+      // at 100 entries every warm pass recompiled 103–128 of them, at
+      // 1000 none (measured on 4 cores over sf0.01 ×3).
+      "spark.sql.codegen.cache.maxEntries" -> "1000")
       .filterNot { case (k, _) => sys.props.contains(k) }
   }
 
@@ -102,6 +109,20 @@ object Session {
     spark.experimental.extraOptimizations = Seq(graft.plans.BandedIntervalJoinRule)
     graft.plans.GraftExtensions.register(spark)
     spark
+  }
+
+  /** Runs `body` with the session confs `pairs` set, then puts each key
+    * back as it was — its old value, or unset when it had none, so an
+    * unset key is not pinned to its default — also when `body` throws.
+    * Session-global: safe because declared queries run serially on one
+    * session (the bench/verify contract). */
+  def withConfs[T](spark: SparkSession, pairs: Seq[(String, String)])(body: => T): T = {
+    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 
   /** JVM/codegen warmup outside any timing (measure the engine, not

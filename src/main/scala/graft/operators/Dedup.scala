@@ -181,15 +181,10 @@ object Dedup {
         // values, and the Jaccard filter applies DIRECTLY on the count
         // aggregate's output after bit-unpacking — no joins sized by
         // the candidate space anywhere (the remaining oc joins are
-        // against the over-cap doc set, broadcast-gated below). One
-        // tokenize pass total for the build; only the exact-verify leg
-        // re-tokenizes, for the oc-doc subset alone. Packed values sort
-        // identically to ids (id in the high bits), which the ordered
-        // pair generator requires. `posting` feeds two consumers
-        // (uc + oc), so it is cached rather than relying on
-        // ReuseExchange matching the two subtrees (ADVICE r8), and the
-        // result — tiny, just the matched pairs — is materialized
-        // eagerly so the cache can be released deterministically.
+        // against the over-cap doc set). One tokenize pass total for the
+        // build; only the exact-verify leg re-tokenizes, for the oc-doc
+        // subset alone. Packed values sort identically to ids (id in the
+        // high bits), which the ordered pair generator requires.
         //
         // r10 native rebuild (VERDICT r9 item 1 + ADVICE r9): all three
         // hot stages go native — ngram_shingles (one byte-level pass,
@@ -198,8 +193,7 @@ object Dedup {
         // buffer, replaces boxed collect_list + array_sort), and the
         // pairs_of_sorted Generator (codegen'd streaming pair emitter,
         // replaces the interpreted transform/slice/flatten explode).
-        // Packing preconditions are now ENFORCED (see packOk below),
-        // and the oc broadcast is count-gated instead of forced.
+        // Packing preconditions are now ENFORCED (see packOk below).
         val nshBits = 21
         def packId(p: Column) = shiftright(p, nshBits)
         def packN(p: Column) = p.bitwiseAND(lit((1L << nshBits) - 1))
@@ -232,13 +226,6 @@ object Dedup {
         val shP = df.select(id.as("id"), shingleCol(df, text, n).as("hs"))
           .select(col("id"), col("hs"), packExpr.as("p"))
           .select(col("p"), explode(col("hs")).as("s"))
-        // `lazyPlan` (SPARK_GRAFT_LAZY_DEDUP=1): skip the cache, the
-        // broadcast-gate count and the eager localCheckpoint and return
-        // the pure declarative plan — for explain/plan-dump callers
-        // (Explain, PLANS.txt), which otherwise pay a full execution
-        // just to look at the plan (ADVICE r9). Production keeps the
-        // eager path: posting feeds two consumers.
-        val lazyPlan = sys.env.get("SPARK_GRAFT_LAZY_DEDUP").contains("1")
         val posting = shP.groupBy(col("s"))
           // sorted_longs_agg = array_sort(collect_list(...)) as ONE
           // native aggregate over a primitive long buffer (r10): no
@@ -248,90 +235,62 @@ object Dedup {
           // (collect_list-not-collect_set rationale unchanged: (id, s)
           // rows are already distinct via ngram_shingles.)
           .agg(call_function("sorted_longs_agg", col("p")).as("ids"))
-        val postingP =
-          if (lazyPlan) posting
-          else posting.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val uc = postingP.where(size(col("ids")).between(2, cap))
-          // Ordered pairs via the custom codegen'd Generator (r10, the
-          // r9 VERDICT's tier-b item): one Generate node streaming
-          // (p1, p2) from the sorted primitive array with a reused
-          // two-long row — no interpreted HOF chain (transform/flatten
-          // are CodegenFallback), no nested array materialization, and
-          // no carried `ids` column (the two-Generate rewrite's failure
-          // mode over the cached posting relation: sf10 113.6 → 141 s).
-          // r14 (guide §2.3): the size-compatibility cut rides inside the
-          // generator — a pair with round4(min(n1,n2)/max(n1,n2)) below
-          // the threshold can never pass either downstream leg (i ≤
-          // min(n1,n2) and jac/round are monotone), so it is skipped
-          // before the count aggregate pays for it. Exact rewrite; the
-          // 5.1e-5 epsilon is the HALF_UP round-at-4-decimals boundary
-          // plus a conservative double-representation guard (see
-          // SortedPairsSizeCut). Measured at sf0.1: 1.27 M → 0.97 M
-          // generated pairs (−24%).
-          val pairGen = call_function("pairs_of_sorted_sizecut", col("ids"),
-            lit(nshBits), lit(threshold - 5.1e-5))
-          val iUc = uc.select(pairGen.as(Seq("p1", "p2")))
-            .groupBy(col("p1"), col("p2"))
-            .agg(count(lit(1)).as("i_uc"))
-            // (p1, p2) groups ARE (d1, d2) groups: n_sh is a function of
-            // the id, so unpacking after the aggregate is free.
-            .select(packId(col("p1")).as("d1"), packN(col("p1")).as("n1"),
-              packId(col("p2")).as("d2"), packN(col("p2")).as("n2"),
-              col("i_uc"))
-          // Per-doc over-cap shingle count: explode of the few dropped
-          // hot lists (cached posting — no re-aggregation).
-          val oc = postingP.where(size(col("ids")) > cap)
-            .select(explode(col("ids")).as("e"))
-            .groupBy(packId(col("e")).as("id")).agg(count(lit(1)).as("oc"))
-          // Broadcast GATE, not a forced hint (ADVICE r9): oc is "tiny"
-          // only for corpora whose boilerplate stays under the df cap —
-          // on a boilerplate-heavy corpus at the 100 TB design point it
-          // approaches ALL docs and a forced broadcast is exactly the
-          // 8-GiB-driver-kill class the q91 merge hints fixed. The gate
-          // measures the actual count (cheap: one pass over the cached
-          // posting) and only hints when the build side is provably
-          // small; above the gate — or in lazy plan mode, where nothing
-          // may execute — AQE sizes the join from real map output.
-          val ocSmall = !lazyPlan && oc.count() <= (1L << 22)
-          def ocSide(d: String, as: String) = {
-            val side = oc.select(col("id").as(d), col("oc").as(as))
-            if (ocSmall) broadcast(side) else side
-          }
-          val enriched = iUc
-            .join(ocSide("d1", "oc1"), Seq("d1"), "left")
-            .join(ocSide("d2", "oc2"), Seq("d2"), "left")
-            .withColumn("oc_min",
-              least(coalesce(col("oc1"), lit(0L)), coalesce(col("oc2"), lit(0L))))
-          val exact = enriched.where(col("oc_min") === 0)
-            .withColumn("jac", round(col("i_uc") /
-              (col("n1") + col("n2") - col("i_uc")).cast("double"), 4))
-            .where(col("jac") >= threshold)
-            .select(col("d1"), col("d2"), col("jac"))
-          val iMax = least(col("i_uc") + col("oc_min"), least(col("n1"), col("n2")))
-          val maybe = enriched.where(col("oc_min") > 0)
-            .where(round(iMax / (col("n1") + col("n2") - iMax).cast("double"), 4)
-              >= threshold)
-            .select(col("d1"), col("d2"))
-          val vSets = df.select(id.as("id"), text.as("__txt"))
-            .join(oc.select(col("id")), Seq("id"), "left_semi")
-            .select(col("id"), shingleCol(df, col("__txt"), n).as("hs"))
-          val result = exact.unionByName(verifyJaccard(maybe, vSets, threshold))
-          // Eager materialization semantics (ADVICE r9, now documented):
-          // localCheckpoint(true) EXECUTES the whole job at construction
-          // time — required so the posting cache can be released
-          // deterministically in the finally below while the returned
-          // frame stays consumable. Two consequences a caller must know:
-          // (a) merely building this DataFrame runs the query (explain-
-          // only callers should set SPARK_GRAFT_LAZY_DEDUP=1, which
-          // returns the pure lazy plan instead); (b) localCheckpoint
-          // blocks are NON-replicated — on executor loss in a cluster
-          // deploy the materialized result fails rather than recomputes,
-          // the standard trade for truncating a cached-lineage plan. A
-          // deploy that needs fault-tolerant retention should write the
-          // result to a table instead of holding the frame.
-          if (lazyPlan) result else result.localCheckpoint(true)
-        } finally { if (!lazyPlan) { postingP.unpersist(false) }; () }
+        val uc = posting.where(size(col("ids")).between(2, cap))
+        // Ordered pairs via the custom codegen'd Generator (r10, the
+        // r9 VERDICT's tier-b item): one Generate node streaming
+        // (p1, p2) from the sorted primitive array with a reused
+        // two-long row — no interpreted HOF chain (transform/flatten
+        // are CodegenFallback), no nested array materialization, and
+        // no carried `ids` column (the two-Generate rewrite's failure
+        // mode: sf10 113.6 → 141 s).
+        // r14 (guide §2.3): the size-compatibility cut rides inside the
+        // generator — a pair with round4(min(n1,n2)/max(n1,n2)) below
+        // the threshold can never pass either downstream leg (i ≤
+        // min(n1,n2) and jac/round are monotone), so it is skipped
+        // before the count aggregate pays for it. Exact rewrite; the
+        // 5.1e-5 epsilon is the HALF_UP round-at-4-decimals boundary
+        // plus a conservative double-representation guard (see
+        // SortedPairsSizeCut). Measured at sf0.1: 1.27 M → 0.97 M
+        // generated pairs (−24%).
+        val pairGen = call_function("pairs_of_sorted_sizecut", col("ids"),
+          lit(nshBits), lit(threshold - 5.1e-5))
+        val iUc = uc.select(pairGen.as(Seq("p1", "p2")))
+          .groupBy(col("p1"), col("p2"))
+          .agg(count(lit(1)).as("i_uc"))
+          // (p1, p2) groups ARE (d1, d2) groups: n_sh is a function of
+          // the id, so unpacking after the aggregate is free.
+          .select(packId(col("p1")).as("d1"), packN(col("p1")).as("n1"),
+            packId(col("p2")).as("d2"), packN(col("p2")).as("n2"),
+            col("i_uc"))
+        // Per-doc over-cap shingle count: explode of the few dropped
+        // hot lists. oc is small only while boilerplate stays under the
+        // df cap; on a boilerplate-heavy corpus it approaches all docs,
+        // so its two joins carry no broadcast hint — AQE sizes them from
+        // real map output (a forced broadcast is the driver-kill class
+        // the q91 merge hints fixed).
+        val oc = posting.where(size(col("ids")) > cap)
+          .select(explode(col("ids")).as("e"))
+          .groupBy(packId(col("e")).as("id")).agg(count(lit(1)).as("oc"))
+        def ocSide(d: String, as: String) = oc.select(col("id").as(d), col("oc").as(as))
+        val enriched = iUc
+          .join(ocSide("d1", "oc1"), Seq("d1"), "left")
+          .join(ocSide("d2", "oc2"), Seq("d2"), "left")
+          .withColumn("oc_min",
+            least(coalesce(col("oc1"), lit(0L)), coalesce(col("oc2"), lit(0L))))
+        val exact = enriched.where(col("oc_min") === 0)
+          .withColumn("jac", round(col("i_uc") /
+            (col("n1") + col("n2") - col("i_uc")).cast("double"), 4))
+          .where(col("jac") >= threshold)
+          .select(col("d1"), col("d2"), col("jac"))
+        val iMax = least(col("i_uc") + col("oc_min"), least(col("n1"), col("n2")))
+        val maybe = enriched.where(col("oc_min") > 0)
+          .where(round(iMax / (col("n1") + col("n2") - iMax).cast("double"), 4)
+            >= threshold)
+          .select(col("d1"), col("d2"))
+        val vSets = df.select(id.as("id"), text.as("__txt"))
+          .join(oc.select(col("id")), Seq("id"), "left_semi")
+          .select(col("id"), shingleCol(df, col("__txt"), n).as("hs"))
+        exact.unionByName(verifyJaccard(maybe, vSets, threshold))
     }
   }
 
@@ -494,10 +453,15 @@ object Dedup {
     // edge frame (the init `distinct` needed it materialized anyway).
     val nEdges = edges.count()
     val loopParts = math.min(512L, math.max(1L, nEdges / 2000000L)).toString
-    val confKeys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-    val saved = confKeys.map(k => k -> spark.conf.getOption(k))
-    confKeys.foreach(k => spark.conf.set(k, loopParts))
+    try graft.Session.withConfs(spark, Seq("spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum").map(_ -> loopParts)) {
+      propagateLabels(edges, maxIter)
+    } finally edges.unpersist()
+  }
+
+  /** [[connectedComponents]]' rounds over the cached `edges` (src, dst):
+    * returns the persisted (n, label) frame of the last round. */
+  private def propagateLabels(edges: DataFrame, maxIter: Int): DataFrame = {
     var labels = edges.select(col("src").as("n")).distinct()
       .withColumn("label", col("n")).cache()
     // the DF that actually holds this round's cache (labels may be a
@@ -549,14 +513,7 @@ object Dedup {
       // climb past a handful should checkpoint between rounds
       println(s"[graft] connectedComponents: converged in $iter rounds")
       labels
-    } catch { case e: Throwable => labelsCache.unpersist(); throw e
-    } finally {
-      edges.unpersist()
-      saved.foreach { case (k, v) =>
-        v match { case Some(x) => spark.conf.set(k, x)
-                  case None => spark.conf.unset(k) }
-      }
-    }
+    } catch { case e: Throwable => labelsCache.unpersist(); throw e }
   }
 
   /** Survivor selection over [[connectedComponents]]: per duplicate

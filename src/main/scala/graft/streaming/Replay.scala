@@ -44,7 +44,7 @@ object Replay {
     Files.deleteIfExists(p)
   }
 
-  /** Volume-derived state-partition count for the STATEFUL replays
+  /** The volume-derived state-partition count for the STATEFUL replays
     * (r13 opt round, guide §2.2/§6): every micro-batch commits one state
     * file per shuffle partition per stateful operator, so with the
     * session default (core count) a tiny-state replay pays 32 commits ×
@@ -57,28 +57,12 @@ object Replay {
     * deploy's key volume; state partition count is fixed by the FIRST
     * batch's checkpoint, so a production stream sizes it for its
     * lifetime peak, not its first hour). Output values are partition-
-    * invariant (keyed state, decimal-exact sums) — oracle-checked. */
-  private def stateParts(sfDir: String): Int =
-    math.min(512L, math.max(4L, graft.Session.dirBytes(sfDir) / (4L << 20))).toInt
-
-  /** Runs `body` (a stream build + start + awaitTermination) with
-    * `spark.sql.shuffle.partitions` set to the volume-derived state
-    * count, restoring the session value after — the conf is read at
-    * stream PLANNING time, so only the wrapped stream sees it. */
-  private def withStateParts[T](spark: SparkSession, sfDir: String)
-                               (body: => T): T = {
-    // getOption/unset restore (same idiom as Dedup.connectedComponents —
-    // ADVICE r13): an unset key stays unset instead of being pinned to
-    // its default. Session-global conf mutation is safe because declared
-    // queries run serially on this session (bench/verify contract).
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, stateParts(sfDir).toString)
-    try body finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+    * invariant (keyed state, decimal-exact sums) — oracle-checked. The
+    * conf is read at stream PLANNING time, so a stream built and started
+    * inside `Session.withConfs(spark, stateConfs(sfDir))` alone sees it. */
+  private def stateConfs(sfDir: String): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" ->
+      math.min(512L, math.max(4L, graft.Session.dirBytes(sfDir) / (4L << 20))).toString)
 
   /** Replays an events-derived telegram corpus through the [[KitState]]
     * state machine over a REAL micro-batch boundary: the corpus is
@@ -116,7 +100,7 @@ object Replay {
           ("replay-1.parquet", col("ts") > tMid, 2000000L)))
     corpusP.unpersist()
     val outDir = tmpRoot.resolve("kit_out").toString
-    withStateParts(spark, sfDir) {
+    graft.Session.withConfs(spark, stateConfs(sfDir)) {
       val q = KitState(
           spark.readStream.schema(corpus.schema)
             .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
@@ -142,7 +126,7 @@ object Replay {
     * clusters by bucket), so too few buckets serialize the write on a
     * many-core box: min(cores, one bucket per 8 MiB), inactive once
     * volume/256 MiB exceeds the core count. Both r14 mis-derivations were
-    * CAUGHT BY MEASUREMENT and corrected: the stateParts 4-MiB divisor
+    * CAUGHT BY MEASUREMENT and corrected: the stateConfs 4-MiB divisor
     * gave 38 buckets at sf1 (1.77× slower — per-file constants), a pure
     * 256-MiB divisor gave 4 (7.12 vs 5.92 s against 16 — write
     * serialized). This form: sf0.1 → 4 (A/B: 4 beats 16, 2.63 vs 2.85),
@@ -416,7 +400,7 @@ object Replay {
           ("replay-3.parquet", !even && !f1Pred && !f2Pred, 4000000L)))
     corpus.unpersist()
     val outDir = tmpRoot.resolve("dedup_out").toString
-    withStateParts(spark, sfDir) {
+    graft.Session.withConfs(spark, stateConfs(sfDir)) {
       val q = spark.readStream.schema(corpus.schema)
           .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
         .withWatermark("ts", s"$delayMin minutes")
@@ -556,7 +540,7 @@ object Replay {
           ("replay-5.parquet", col("cls") === "f4", 6000000L)))
     corpus.unpersist(); ev.unpersist()
     val outDir = tmpRoot.resolve("sess_out").toString
-    withStateParts(spark, sfDir) {
+    graft.Session.withConfs(spark, stateConfs(sfDir)) {
       val q = spark.readStream.schema(corpus.schema)
           .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
         .withWatermark("ts", s"$delaySec seconds")
@@ -610,7 +594,7 @@ object Replay {
           ("replay-2.parquet", !even && col("ts") <= lit(w1), 3000000L)))
     corpus.unpersist()
     val outDir = tmpRoot.resolve("wm_out").toString
-    withStateParts(spark, sfDir) {
+    graft.Session.withConfs(spark, stateConfs(sfDir)) {
       val q = spark.readStream.schema(corpus.schema)
           .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
         .withWatermark("ts", s"$deltaMin minutes")

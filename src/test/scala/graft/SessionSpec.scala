@@ -68,6 +68,7 @@ class SessionSpec extends AnyFunSuite {
     val bench = childConfs("bench", dir)
     assert(bench("spark.sql.adaptive.coalescePartitions.initialPartitionNum") === "38")
     assert(bench("spark.sql.autoBroadcastJoinThreshold") === "64m")
+    assert(bench("spark.sql.codegen.cache.maxEntries") === "1000")
     assert(childConfs("verify", dir) === bench)
   }
 
@@ -76,6 +77,26 @@ class SessionSpec extends AnyFunSuite {
     val confs = childConfs("bench", corpus(1L << 20), Seq(s"-D$key=-1"))
     assert(confs(key) === "-1")
     assert(confs("spark.sql.shuffle.partitions") === "2")
+  }
+
+  test("withConfs puts back a set key and unsets an unset one, also when the body throws") {
+    val spark = TestSpark.spark
+    val (set, unset) = ("spark.sql.shuffle.partitions", "spark.sql.graft.sessionSpecProbe")
+    val before = spark.conf.get(set)
+    assert(spark.conf.getOption(unset).isEmpty)
+    val pairs = Seq(set -> "7", unset -> "on")
+    def restored(): Unit = {
+      assert(spark.conf.get(set) === before)
+      assert(spark.conf.getOption(unset).isEmpty)
+    }
+    assert(Session.withConfs(spark, pairs)((spark.conf.get(set), spark.conf.get(unset))) ===
+      (("7", "on")))
+    restored()
+    val e = intercept[IllegalStateException] {
+      Session.withConfs(spark, pairs) { throw new IllegalStateException("boom") }
+    }
+    assert(e.getMessage === "boom")
+    restored()
   }
 
   /** The `.scala` files under `root` (relative to the repository root). */

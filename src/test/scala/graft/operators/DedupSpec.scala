@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.TestAccess
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -96,6 +97,27 @@ class DedupSpec extends AnyFunSuite {
         3, 0.5, maxShingleDf = Some(5))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(out == Map((100L, 101L) -> 0.8182))
+  }
+
+  test("df-cap build over a parquet corpus runs no job; both legs emit the frozen rows") {
+    // (100,101) share an over-cap boilerplate, so they come through the
+    // verify leg; (500,501) have no over-cap shingle, so they come
+    // through the exact-from-counts leg. cap = 5, the boilerplate's df 12.
+    val bB = "b1 b2 b3 b4 b5 b6 b7"
+    val dir = java.nio.file.Files.createTempDirectory("graft_test_dedup_").toString
+    ((1 to 10).map(i => (i.toLong, s"$bB f${i}a f${i}b")) ++
+      Seq((100L, s"$bB x1 x2 x3 x4 x5"),
+          (101L, s"$bB x1 x2 x3 x4 x6"),
+          (500L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+          (501L, "alpha beta gamma delta epsilon zeta eta theta iota lambda")))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    graft.Tables.documents(spark, dir) // the first read memoises the schema
+    def build() = Dedup.ngramJaccardPairs(graft.Tables.documents(spark, dir),
+      col("doc_id"), col("text"), 3, 0.5, maxShingleDf = Some(5))
+    assert(TestAccess.jobsDuring(spark.sparkContext)(build()) == 0)
+    val rows = build().collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(rows == Map((100L, 101L) -> 0.8182, (500L, 501L) -> 0.7778))
   }
 
   test("df-cap on the planted-near-dup corpus reproduces the uncapped pairs") {
