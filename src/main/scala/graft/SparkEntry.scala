@@ -998,8 +998,8 @@ object SparkEntry {
     // Q76 — TTN envelope import end-to-end (D1/D4/D5,
     // MyMQTTclient.py:312-418 + MyDatacollector.py:1466-1553): events
     // rows are rendered as REAL V2/V3 envelope JSON (alternating by
-    // event_id, exercising both from_json branches), parsed back through
-    // TtnEnvelope.parse, timestamps resolved ISO→epoch, payload
+    // event_id, exercising both envelope branches), parsed back through
+    // TtnEnvelope.parseBest, timestamps resolved ISO→epoch, payload
     // base64-round-tripped, and the best gateway argmax'd over a
     // per-event synthetic gateway list. The oracle states the closed
     // form of every output directly from events.
@@ -1389,9 +1389,12 @@ object SparkEntry {
     // semantics, locked in WindowOpsSpec) — unlike the watermark
     // replays, the edge needs no driver-side guard because BOTH engines
     // encode the same `diff > gap` break. Oracle = gaps-and-islands.
+    // Sessions key on whole seconds, as the oracle does and as the
+    // reference archive's MySQL `datetime` stores them: on sub-second
+    // ts a gap a fraction of a second over 12347 s would split here only.
     "q99_session_windows" -> ((s, d) =>
       WindowOps.sessionize(Tables.events(s, d), col("user_id"),
-          col("ts").cast("timestamp"), 12347, col("value"))
+          date_trunc("second", col("ts").cast("timestamp")), 12347, col("value"))
         .withColumnRenamed("key", "user_id")),
 
     // Q100 — console monitor row (K4, MyDatacollector.py:2110-2117

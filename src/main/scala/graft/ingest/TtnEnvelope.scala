@@ -11,9 +11,10 @@ import org.apache.spark.sql.types._
   * best-gateway selection (D5, MyDatacollector.py:1466-1553: score
   * `10·snr + 0.2·rssi`, argmax).
   *
-  * Everything is `from_json` + struct navigation — no UDF; the schema is
-  * permissive (missing branches null out) so one parse covers both
-  * envelope versions, exactly like the reference's single import path.
+  * One parse covers both envelope versions, exactly like the reference's
+  * single import path: [[parseBest]] is the engine's path,
+  * [[parseJackson]] the permissive `from_json` reference it is tested
+  * against (missing branches null out).
   */
 object TtnEnvelope {
 
@@ -50,61 +51,26 @@ object TtnEnvelope {
         StructField("rssi", DoubleType),
         StructField("snr", DoubleType))))))))))
 
-  /** Gateway score (MyDatacollector.py:1467-1470 GTWstrength). */
-  def gatewayScore(snr: Column, rssi: Column): Column =
-    snr * 10.0 + rssi * 0.2
-
-  /** Normalized gateway frame element type ([[parse]]'s `gateways`). */
+  /** Normalized gateway array type of [[parseJackson]]'s `gateways`. */
   private val gwFrameType =
     "array<struct<gtw_id:string,rssi:double,snr:double>>"
 
-  /** Parse raw `topic JSON` lines into a normalized envelope frame:
-    * (app_id, dev_id, port, counter, payload bytes, event ISO time,
-    * gateways[], best_gateway, best_score). Works on a batch or
+  /** Parse raw `topic JSON` lines into the envelope frame: (topic,
+    * app_id, dev_id, port, counter, payload bytes, event ISO time,
+    * n_gateways, best_gateway, best_score). Works on a batch or
     * streaming text DataFrame alike.
     *
-    * The envelope decode is [[graft.plans.TtnEnvelopeParse]] — a native
-    * single-pass byte-level parser ([[TtnFastJson]]) replacing
-    * `from_json(envelopeSchema)` + coalesce/arrays_zip navigation: the
-    * DiagQ76 sf1 stage breakdown priced the Jackson stage at ~9.6 s over
-    * 10 M envelopes EVEN with the parse schema pruned to one field
-    * (generic tokenization dominates, not schema width); the native scan
-    * extracts only the consumed subfields and runs inside whole-stage
-    * codegen as one static call. The old composition is kept as
-    * [[parseJackson]] and differential-fuzzed against the native path in
-    * TtnFastJsonSpec. Best-gateway argmax stays the codegen'd
-    * [[graft.plans.BestGateway]] loop. */
-  def parse(lines: DataFrame, lineCol: Column): DataFrame = {
-    graft.plans.GraftExtensions.register(lines.sparkSession)
-    val topic = substring_index(lineCol, " ", 1)
-    val json = lineCol.substr(length(topic) + 2, length(lineCol))
-    lines.select(
-      topic.as("topic"),
-      call_function("ttn_parse", json).as("e"))
-      .select(
-        col("topic"), col("e.app_id").as("app_id"),
-        col("e.dev_id").as("dev_id"), col("e.port").as("port"),
-        col("e.counter").as("counter"),
-        unbase64(col("e.payload_b64")).as("payload"),
-        col("e.event_time").as("event_time"),
-        col("e.gateways").as("gateways"))
-      // D5 best gateway: max (score, id) struct — deterministic argmax,
-      // one codegen'd loop (see scaladoc above).
-      .withColumn("best", call_function("best_gateway", col("gateways")))
-      .withColumn("best_gateway", col("best.gtw_id"))
-      .withColumn("best_score", round(col("best.score"), 2))
-      .drop("best")
-  }
-
-  /** The fused q76 hot path (r12, VERDICT r11 item 2): like [[parse]]
-    * but the gateway array is reduced INSIDE the parse —
-    * `ttn_parse_best` streams the element count and the D5 argmax per
-    * element, so the per-row `array<struct>` never materializes.
-    * Output frame: (topic, app_id, dev_id, port, counter, payload,
-    * event_time, n_gateways, best_gateway, best_score) — exactly
-    * `parse(...)` + `size(gateways)` + `best_gateway(gateways)` except
-    * that `n_gateways` is null (not -1) for a null array; parity
-    * differential-fuzzed in TtnFastJsonSpec. */
+    * The decode is `ttn_parse_best` ([[graft.plans.TtnParseBest]]
+    * over [[TtnFastJson]]), a native single-pass byte-level parser in
+    * place of `from_json(envelopeSchema)` + coalesce/arrays_zip
+    * navigation: the DiagQ76 sf1 stage breakdown priced the Jackson stage
+    * at ~9.6 s over 10 M envelopes EVEN with the parse schema pruned to
+    * one field (generic tokenization dominates, not schema width). The
+    * gateway array is reduced INSIDE the parse (r12, VERDICT r11 item 2)
+    * — the element count and the D5 argmax are streamed per element, so
+    * the per-row `array<struct>` never materializes. `n_gateways` is
+    * null for a null or absent gateway array; parity with
+    * [[parseJackson]] is differential-fuzzed in TtnFastJsonSpec. */
   def parseBest(lines: DataFrame, lineCol: Column): DataFrame = {
     graft.plans.GraftExtensions.register(lines.sparkSession)
     val topic = substring_index(lineCol, " ", 1)
@@ -123,13 +89,16 @@ object TtnEnvelope {
         round(col("e.best_score"), 2).as("best_score"))
   }
 
-  /** The original `from_json` + struct-navigation composition — the
-    * reference semantics the native [[TtnFastJson]] parser must match;
-    * kept as the differential-fuzz oracle (TtnFastJsonSpec) and as the
-    * fallback a deployment could pin if it ever hit an envelope shape
-    * outside the fuzzed agreement domain. */
+  /** The `from_json` + struct-navigation composition — the reference
+    * semantics [[parseBest]] must match, kept as the differential-fuzz
+    * oracle of TtnFastJsonSpec. Returns the full frame: [[parseBest]]'s
+    * columns except `n_gateways`, plus the normalized `gateways` array.
+    * The best gateway is the HOF argmax
+    * `array_max(transform(gws, g -> struct(score, gtw_id)))`, nulls-first
+    * (score, gtw_id) ordering. An array whose elements are all null
+    * gives `struct(null, null)` here where the native argmax gives null;
+    * read out as `best_gateway`/`best_score`, both are nulls. */
   def parseJackson(lines: DataFrame, lineCol: Column): DataFrame = {
-    graft.plans.GraftExtensions.register(lines.sparkSession)
     val topic = substring_index(lineCol, " ", 1)
     val json = lineCol.substr(length(topic) + 2, length(lineCol))
     val parsed = lines.select(
@@ -147,6 +116,10 @@ object TtnEnvelope {
       mg.getField("gtw_id"), mg.getField("rssi"), mg.getField("snr"))
       .cast(gwFrameType)
     val gws = when(v3, gwsV3).otherwise(gwsV2)
+    // D5 (MyDatacollector.py:1467-1470 GTWstrength): score 10·snr + 0.2·rssi
+    val best = array_max(transform(col("gateways"), g =>
+      struct((g.getField("snr") * 10.0 + g.getField("rssi") * 0.2).as("score"),
+        g.getField("gtw_id").as("gtw_id"))))
     parsed.select(
       col("topic"),
       coalesce(col("e.end_device_ids.application_ids.application_id"),
@@ -158,9 +131,7 @@ object TtnEnvelope {
         col("e.payload_raw"))).as("payload"),
       coalesce(col("e.metadata.time"), col("e.received_at")).as("event_time"),
       gws.as("gateways"))
-      // D5 best gateway: max (score, id) struct — deterministic argmax,
-      // one codegen'd loop (see scaladoc above).
-      .withColumn("best", call_function("best_gateway", col("gateways")))
+      .withColumn("best", best)
       .withColumn("best_gateway", col("best.gtw_id"))
       .withColumn("best_score", round(col("best.score"), 2))
       .drop("best")

@@ -1,33 +1,31 @@
 package graft.ingest
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass byte-level TTN envelope parser — the q76 hot path
-  * (reference: lib/MyMQTTclient.py:312-418 RecordImport; the reference
-  * likewise parses each telegram once and touches only the handful of
-  * subfields the import consumes).
+/** Single-pass byte-level TTN envelope parser — the engine's only
+  * envelope path (reference: lib/MyMQTTclient.py:312-418 RecordImport;
+  * the reference likewise parses each telegram once and touches only the
+  * handful of subfields the import consumes).
   *
   * Why not `from_json`: the DiagQ76 stage breakdown priced the Jackson
   * parse of 10 M envelopes at ~9.6 s even when Catalyst prunes the parse
   * schema to ONE field — the cost is generic tokenization plus Spark's
   * per-row parser/row-builder machinery, not schema width. This parser
   * is a recursive-descent scan over the line's UTF-8 bytes that extracts
-  * exactly the subfields [[TtnEnvelope.parse]] consumes and skips every
-  * other value generically, allocating only the output row and (for
-  * escape-free strings) zero-copy `UTF8String` views.
+  * exactly the subfields [[TtnEnvelope.parseBest]] consumes and skips
+  * every other value generically, allocating only the output row and
+  * (for escape-free strings) zero-copy `UTF8String` views.
   *
   * Semantics — identical to the `from_json(envelopeSchema)` + struct
-  * navigation composition it replaces, on every input the envelope
-  * contract reaches (arbitrary key order, inter-token whitespace,
-  * JSON escapes incl. \uXXXX surrogate pairs, unknown extra fields,
-  * null/missing branches, duplicate keys last-wins (for object-schema
-  * keys: last CONVERTIBLE occurrence wins — a scalar occurrence of
+  * navigation + `size` + HOF argmax composition of
+  * [[TtnEnvelope.parseJackson]], on every input the envelope contract
+  * reaches (arbitrary key order, inter-token whitespace, JSON escapes
+  * incl. \uXXXX surrogate pairs, unknown extra fields, null/missing
+  * branches, duplicate keys last-wins (for object-schema keys: last
+  * CONVERTIBLE occurrence wins — a scalar occurrence of
   * metadata/end_device_ids/uplink_message is ignored and an earlier
   * object's subfields survive, measured Jackson behavior), nested-object
   * skipping; differential-fuzzed against the Jackson path in
@@ -40,11 +38,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - per-field precedence is the exact coalesce order of the Column
   *     form: v3-first for app/dev/port/counter/payload, v2-first for
   *     event_time (`coalesce(metadata.time, received_at)`);
-  *   - the gateway frame follows `when(uplink_message.isNotNull, v3)
+  *   - the gateway array follows `when(uplink_message.isNotNull, v3)
   *     .otherwise(v2)` — uplink_message must be a JSON OBJECT to select
   *     the v3 branch (a JSON null leaves the struct null);
-  *   - a null ELEMENT in a gateway array becomes `struct(null,null,null)`
-  *     (what `arrays_zip` over per-field extractions yields);
+  *   - a null ELEMENT in a gateway array counts towards `n_gateways`
+  *     (what `size` of the `arrays_zip` array counts) and never wins the
+  *     argmax;
   *   - scalar type mismatches (string where number expected and vice
   *     versa) null the field and skip the value. This is the one
   *     DOCUMENTED divergence from Jackson, whose StringType fallback
@@ -53,30 +52,18 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TtnFastJson {
 
-  /** Normalized envelope frame type (pre-decode: payload still base64). */
-  val outType: StructType = StructType(Seq(
-    StructField("app_id", StringType),
-    StructField("dev_id", StringType),
-    StructField("port", IntegerType),
-    StructField("counter", LongType),
-    StructField("payload_b64", StringType),
-    StructField("event_time", StringType),
-    StructField("gateways", ArrayType(StructType(Seq(
-      StructField("gtw_id", StringType),
-      StructField("rssi", DoubleType),
-      StructField("snr", DoubleType)))))))
-
-  /** Fused envelope frame (r12, VERDICT r11 item 2): the gateway array
-    * is REDUCED inside the parse — element count plus the
-    * [[graft.plans.BestGateway]] argmax, streamed per element — so the
-    * per-row `array<struct>` (up to dozens of rows + boxes per envelope
-    * over 10 M envelopes) is never allocated. Null semantics:
-    * `n_gateways` is null iff the selected version's gateway array is
-    * null/absent (else the element count, nulls included — the `size()`
-    * contract on a non-null array); `best_score`/`best_gtw_id` are the
-    * fields of `best_gateway(gateways)`'s struct, both null when it is
-    * null. Parity with the unfused parse + size + best_gateway
-    * composition is differential-fuzzed in TtnFastJsonSpec. */
+  /** Envelope frame (r12, VERDICT r11 item 2): the gateway array is
+    * REDUCED inside the parse — element count plus the D5 argmax,
+    * streamed per element — so the per-row `array<struct>` (up to dozens
+    * of rows + boxes per envelope over 10 M envelopes) is never
+    * allocated. Null semantics: `n_gateways` is null iff the selected
+    * version's gateway array is null/absent (else the element count,
+    * nulls included — the `size()` contract on a non-null array);
+    * `best_score`/`best_gtw_id` are the fields of the HOF argmax
+    * `array_max(transform(gws, g -> struct(score, gtw_id)))`, both null
+    * when no non-null element exists. Parity with
+    * [[TtnEnvelope.parseJackson]] is differential-fuzzed in
+    * TtnFastJsonSpec. */
   val fusedOutType: StructType = StructType(Seq(
     StructField("app_id", StringType),
     StructField("dev_id", StringType),
@@ -94,23 +81,22 @@ object TtnFastJson {
     override def fillInStackTrace(): Throwable = this
   }
 
-  /** Per-array gateway reduction state: element count + the BestGateway
+  /** Per-array gateway reduction state: element count + the
     * lexicographic (score, id) argmax, accumulated while the elements
-    * are parsed; `arr` additionally holds the materialized array on the
-    * unfused path. One short-lived instance per gateway-array
-    * OCCURRENCE (duplicate keys re-parse into a fresh one — last
-    * convertible occurrence wins, the Jackson contract). */
-  private final class GwAcc(buildArr: Boolean) {
+    * are parsed. One short-lived instance per gateway-array OCCURRENCE
+    * (duplicate keys re-parse into a fresh one — last convertible
+    * occurrence wins, the Jackson contract). */
+  private final class GwAcc {
     var count = 0
     var found = false
     var nullScore = true
     var score = 0.0
     var id: UTF8String = null
-    val buf: ArrayBuffer[AnyRef] = if (buildArr) new ArrayBuffer[AnyRef](4) else null
 
-    /** BestGateway's exact per-element comparison (nulls-first (score,
-      * id) struct ordering; null elements skipped — the caller only
-      * feeds non-null elements here). */
+    /** The HOF argmax's per-element comparison: nulls-first (score, id)
+      * struct ordering, where a null snr or rssi nulls the score; null
+      * elements are skipped — the caller only feeds non-null elements
+      * here. */
     def offer(gid: UTF8String, rssi: java.lang.Double, snr: java.lang.Double): Unit = {
       val sNull = rssi == null || snr == null
       val s = if (sNull) 0.0 else 10.0 * snr.doubleValue + 0.2 * rssi.doubleValue
@@ -157,25 +143,17 @@ object TtnFastJson {
   private val K_RSSI = UTF8String.fromString("rssi")
   private val K_SNR = UTF8String.fromString("snr")
 
-  /** Parse one envelope JSON document. Returns null on malformed input
-    * (including non-object top level and trailing garbage). */
-  def parse(line: UTF8String): InternalRow = {
-    if (line == null) return null
-    val b = line.getBytes
-    try doParse(b, fused = false)
-    catch { case scala.util.control.NonFatal(_) => null }
-  }
-
-  /** Parse one envelope into the [[fusedOutType]] frame — gateway array
-    * reduced in-stream, never materialized. */
+  /** Parse one envelope JSON document into the [[fusedOutType]] frame —
+    * gateway array reduced in-stream, never materialized. Returns null
+    * on malformed input (including non-object top level). */
   def parseFused(line: UTF8String): InternalRow = {
     if (line == null) return null
     val b = line.getBytes
-    try doParse(b, fused = true)
+    try doParse(b)
     catch { case scala.util.control.NonFatal(_) => null }
   }
 
-  private def doParse(b: Array[Byte], fused: Boolean): InternalRow = {
+  private def doParse(b: Array[Byte]): InternalRow = {
     val n = b.length
     var i = 0
 
@@ -419,19 +397,18 @@ object TtnFastJson {
     var v2Gws: GwAcc = null; var v3Gws: GwAcc = null
     var umSeen = false
 
-    /** One gateway array: elements are objects (or JSON null →
-      * struct(null,null,null), the arrays_zip contract). `v3` selects
-      * which id key the element schema knows — "gtw_id" (v2) vs the
-      * nested "gateway_ids.gateway_id" (v3); the OTHER version's id key
-      * is outside the element schema and is skipped like any unknown.
-      * Returns null for a JSON null / non-array value; otherwise the
-      * streamed reduction (and, unfused, the materialized elements). */
+    /** One gateway array: elements are objects (or JSON null, counted
+      * but never offered). `v3` selects which id key the element schema
+      * knows — "gtw_id" (v2) vs the nested "gateway_ids.gateway_id"
+      * (v3); the OTHER version's id key is outside the element schema and
+      * is skipped like any unknown. Returns null for a JSON null /
+      * non-array value; otherwise the streamed reduction. */
     def parseGwArray(v3: Boolean): GwAcc = {
       ws()
       if (isNullToken()) return null
       if (i >= n || b(i) != '[') { skipValue(); return null }
       i += 1; ws()
-      val acc = new GwAcc(buildArr = !fused)
+      val acc = new GwAcc
       if (i < n && b(i) == ']') { i += 1; return acc }
       var more = true
       while (more) {
@@ -439,8 +416,6 @@ object TtnFastJson {
         if (isNullToken()) {
           // null element: size() counts it, the argmax skips it
           acc.count += 1
-          if (acc.buf != null)
-            acc.buf += new GenericInternalRow(Array[Any](null, null, null))
         } else {
           var gid: UTF8String = null
           var rssi: java.lang.Double = null
@@ -454,8 +429,6 @@ object TtnFastJson {
           }
           acc.count += 1
           acc.offer(gid, rssi, snr)
-          if (acc.buf != null)
-            acc.buf += new GenericInternalRow(Array[Any](gid, rssi, snr))
         }
         ws()
         if (i < n && b(i) == ',') i += 1
@@ -553,15 +526,10 @@ object TtnFastJson {
     val pay = if (v3Pay != null) v3Pay else v2Pay
     val time = if (metaTime != null) metaTime else receivedAt
     val gws = if (umSeen) v3Gws else v2Gws
-    if (fused) {
-      new GenericInternalRow(Array[Any](app, dev, portBoxed, cnt, pay, time,
-        if (gws == null) null else Int.box(gws.count),
-        if (gws == null || !gws.found || gws.nullScore) null
-        else Double.box(gws.score),
-        if (gws == null || !gws.found) null else gws.id))
-    } else {
-      new GenericInternalRow(Array[Any](app, dev, portBoxed, cnt, pay, time,
-        if (gws == null) null else new GenericArrayData(gws.buf.toArray)))
-    }
+    new GenericInternalRow(Array[Any](app, dev, portBoxed, cnt, pay, time,
+      if (gws == null) null else Int.box(gws.count),
+      if (gws == null || !gws.found || gws.nullScore) null
+      else Double.box(gws.score),
+      if (gws == null || !gws.found) null else gws.id))
   }
 }

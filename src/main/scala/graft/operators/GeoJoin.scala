@@ -68,6 +68,32 @@ object GeoJoin {
       maxDLatDeg(radiusM) <= h && maxDLonDeg(radiusM, maxAbsLat) <= w
     }.getOrElse(1)
 
+  /** The cell keys of a radius join: cells at [[pickPrecision]]'s
+    * precision, and a reach of `k = ceil(maxΔ/cellExtent)` cells per
+    * axis (see the object doc). Shared by [[pairsWithinRadius]] and
+    * [[ReverseGeocode.nearestWithinRadius]]. */
+  private[operators] final class CellReach(radiusM: Double, maxAbsLat: Double) {
+    private val p = pickPrecision(radiusM, maxAbsLat)
+    private val (w, h) = cellDims(p)
+    private val kx = math.ceil(maxDLonDeg(radiusM, maxAbsLat) / w).toInt
+    private val ky = math.ceil(maxDLatDeg(radiusM) / h).toInt
+
+    /** The geohash cell of a point. */
+    def cellOf(la: Column, lo: Column): Column =
+      call_function("geohash_encode", la, lo, lit(p))
+
+    /** One row per distinct cell within reach of a point, its own cell
+      * included — latitude clamped at the poles, longitude wrapped;
+      * duplicates from clamp/wrap removed so each candidate pair arises
+      * exactly once against a side that carries a single cell per point. */
+    def reachCells(la: Column, lo: Column): Column = {
+      val cells = for { dy <- -ky to ky; dx <- -kx to kx } yield
+        cellOf(least(greatest(la + lit(dy * h), lit(-89.9999999)), lit(89.9999999)),
+          (lo + lit(dx * w + 540.0)) % 360.0 - 180.0)
+      explode(array_distinct(array(cells: _*)))
+    }
+  }
+
   /** All unordered pairs of `points` within `radiusM` metres.
     *
     * @param points    (key, lat, lon) rows; lat must lie in ±maxAbsLat
@@ -79,33 +105,17 @@ object GeoJoin {
                         lon: Column, radiusM: Double,
                         maxAbsLat: Double = 66.0): DataFrame = {
     GraftExtensions.register(points.sparkSession)
-    val p = pickPrecision(radiusM, maxAbsLat)
-    val (w, h) = cellDims(p)
-    val kx = math.ceil(maxDLonDeg(radiusM, maxAbsLat) / w).toInt
-    val ky = math.ceil(maxDLatDeg(radiusM) / h).toInt
-
-    def cellOf(la: Column, lo: Column): Column =
-      call_function("geohash_encode", la, lo, lit(p))
-
+    val reach = new CellReach(radiusM, maxAbsLat)
     val base = points.select(key.as("k"), lat.as("la"), lon.as("lo"))
-
-    // Probe side: the point's own cell plus every cell within reach —
-    // latitude clamped at the poles, longitude wrapped; duplicates from
-    // clamp/wrap removed so each candidate pair arises exactly once
-    // (the build side carries a single cell per point).
-    val reachCells = for { dy <- -ky to ky; dx <- -kx to kx } yield {
-      val la = least(greatest(col("la") + lit(dy * h), lit(-89.9999999)),
-        lit(89.9999999))
-      val lo = (col("lo") + lit(dx * w + 540.0)) % 360.0 - 180.0
-      cellOf(la, lo)
-    }
+    // Probe side: every cell within reach; the build side carries a
+    // single cell per point.
     val probe = base
-      .withColumn("cell", explode(array_distinct(array(reachCells: _*))))
+      .withColumn("cell", reach.reachCells(col("la"), col("lo")))
       .select(col("k").as("a_key"), col("la").as("a_lat"),
         col("lo").as("a_lon"), col("cell"))
     val build = base
       .select(col("k").as("b_key"), col("la").as("b_lat"),
-        col("lo").as("b_lon"), cellOf(col("la"), col("lo")).as("cell"))
+        col("lo").as("b_lon"), reach.cellOf(col("la"), col("lo")).as("cell"))
 
     probe.join(build, Seq("cell"))
       .where(col("a_key") < col("b_key"))

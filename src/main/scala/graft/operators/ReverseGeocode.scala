@@ -44,32 +44,16 @@ object ReverseGeocode {
                           placeLat: Column, placeLon: Column, radiusM: Double,
                           maxAbsLat: Double = 66.0): DataFrame = {
     GraftExtensions.register(points.sparkSession)
-    val p = GeoJoin.pickPrecision(radiusM, maxAbsLat)
-    val (w, h) = GeoJoin.cellDims(p)
-    val kx = math.ceil(GeoJoin.maxDLonDeg(radiusM, maxAbsLat) / w).toInt
-    val ky = math.ceil(GeoJoin.maxDLatDeg(radiusM) / h).toInt
-
-    def cellOf(la: Column, lo: Column): Column =
-      call_function("geohash_encode", la, lo, lit(p))
-
+    val reach = new GeoJoin.CellReach(radiusM, maxAbsLat)
     val base = points.select(key.as("k"), lat.as("la"), lon.as("lo"))
-
-    // Probe side: own cell + every cell within reach (clamped at the
-    // poles, wrapped in longitude, deduped) — same completeness argument
-    // as GeoJoin.pairsWithinRadius. The gazetteer carries a single cell
-    // per place, so each (point, place) candidate arises exactly once.
-    val reachCells = for { dy <- -ky to ky; dx <- -kx to kx } yield {
-      val la = least(greatest(col("la") + lit(dy * h), lit(-89.9999999)),
-        lit(89.9999999))
-      val lo = (col("lo") + lit(dx * w + 540.0)) % 360.0 - 180.0
-      cellOf(la, lo)
-    }
-    val probe = base
-      .withColumn("cell", explode(array_distinct(array(reachCells: _*))))
+    // Probe side: every cell within reach — the GeoJoin.pairsWithinRadius
+    // completeness argument. The gazetteer carries a single cell per
+    // place, so each (point, place) candidate arises exactly once.
+    val probe = base.withColumn("cell", reach.reachCells(col("la"), col("lo")))
     val gaz = places.select(placeKey.as("place_key"), placeLat.as("p_la"),
       placeLon.as("p_lo"))
     val build = gaz.select(col("place_key"), col("p_la"), col("p_lo"),
-      cellOf(col("p_la"), col("p_lo")).as("cell"))
+      reach.cellOf(col("p_la"), col("p_lo")).as("cell"))
 
     val best = probe.join(broadcast(build), Seq("cell"))
       .withColumn("dist_m", GeoFunctions.haversineM(

@@ -136,16 +136,10 @@ object GraftExtensions {
           .map(_.asInstanceOf[ArrayData].toDoubleArray())
         NearestCentroid(Cast(es(0), ArrayType(DoubleType)), cids, cn2s, cents)
       }),
-    (FunctionIdentifier("best_gateway"),
-      info("best_gateway", "best_gateway(array<struct<gtw_id,rssi,snr>>)"),
-      (es: Seq[Expression]) => BestGateway(es.head)),
-    (FunctionIdentifier("ttn_parse"),
-      info("ttn_parse", "ttn_parse(envelope_json)"),
-      (es: Seq[Expression]) => TtnEnvelopeParse(Cast(es.head, StringType))),
     (FunctionIdentifier("ttn_parse_best"),
       info("ttn_parse_best",
         "ttn_parse_best(envelope_json) — best-gateway argmax fused in"),
-      (es: Seq[Expression]) => TtnEnvelopeParseBest(Cast(es.head, StringType))),
+      (es: Seq[Expression]) => TtnParseBest(Cast(es.head, StringType))),
     (FunctionIdentifier("grubbs_agg"),
       info("grubbs_agg", "grubbs_agg(value, alpha, minN)"),
       // alpha/minN are per-query constants (foldable literals at call

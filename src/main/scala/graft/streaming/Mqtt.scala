@@ -224,32 +224,13 @@ object Mqtt {
     * received (topic, payload) pair. */
   final class MqttCollector(host: String, port: Int, topicFilter: String,
                             clientId: String = "graft-col") {
-    import Codec._
     private val sock = new Socket(host, port)
-    private val in = new DataInputStream(sock.getInputStream)
-    private val out = new DataOutputStream(sock.getOutputStream)
     private val queue = new LinkedBlockingQueue[(String, String)]()
     private val subscribed = new CountDownLatch(1)
     @volatile private var open = true
 
-    daemon("mqtt-collector") {
-      try {
-        val vh = concat(str("MQTT"), Array[Byte](4, 2, 0, 60))
-        writePacket(out, CONNECT, 0, concat(vh, str(clientId)))
-        require(readPacket(in).ptype == CONNACK, "no CONNACK")
-        writePacket(out, SUBSCRIBE, 2,
-          concat(Array[Byte](0, 1), str(topicFilter), Array[Byte](0)))
-        require(readPacket(in).ptype == SUBACK, "no SUBACK")
-        subscribed.countDown()
-        while (open) {
-          val p = readPacket(in)
-          if (p.ptype == PUBLISH) {
-            val (topic, off) = readStr(p.body, 0)
-            queue.put((topic,
-              new String(p.body, off, p.body.length - off, UTF_8)))
-          }
-        }
-      } catch { case _: Exception => () }
+    subscribe("mqtt-collector", sock, clientId, topicFilter, subscribed, open) {
+      (topic, payload) => queue.put((topic, payload))
     }
 
     def awaitSubscribed(): Unit = subscribed.await()
@@ -290,7 +271,6 @@ object Mqtt {
   final class MqttSubscriberBridge(brokerHost: String, brokerPort: Int,
                                    topicFilter: String,
                                    clientId: String = "graft-sub") {
-    import Codec._
     private val lineServer = new ServerSocket(0, 1, InetAddress.getLoopbackAddress)
     val linePort: Int = lineServer.getLocalPort
     val lineHost: String = InetAddress.getLoopbackAddress.getHostAddress
@@ -300,28 +280,9 @@ object Mqtt {
     @volatile private var open = true
 
     private val sock = new Socket(brokerHost, brokerPort)
-    private val in = new DataInputStream(sock.getInputStream)
-    private val out = new DataOutputStream(sock.getOutputStream)
 
-    daemon("mqtt-bridge-sub") {
-      try {
-        val vh = concat(str("MQTT"), Array[Byte](4, 2, 0, 60))
-        writePacket(out, CONNECT, 0, concat(vh, str(clientId)))
-        require(readPacket(in).ptype == CONNACK, "no CONNACK")
-        // packet id 1; one (filter, QoS 0) entry
-        writePacket(out, SUBSCRIBE, 2,
-          concat(Array[Byte](0, 1), str(topicFilter), Array[Byte](0)))
-        require(readPacket(in).ptype == SUBACK, "no SUBACK")
-        subscribed.countDown()
-        while (open) {
-          val p = readPacket(in)
-          if (p.ptype == PUBLISH) {
-            val (topic, off) = readStr(p.body, 0)
-            val payload = new String(p.body, off, p.body.length - off, UTF_8)
-            queue.put(s"$topic $payload")
-          }
-        }
-      } catch { case _: Exception => () }
+    subscribe("mqtt-bridge-sub", sock, clientId, topicFilter, subscribed, open) {
+      (topic, payload) => queue.put(s"$topic $payload")
     }
 
     // queue → history pump: the reader thread never blocks on a client
@@ -371,6 +332,36 @@ object Mqtt {
       scala.util.Try(sock.close())
       scala.util.Try(lineServer.close())
     }
+  }
+
+  /** The QoS-0 subscriber loop of [[MqttCollector]] and
+    * [[MqttSubscriberBridge]], on daemon thread `name`: CONNECT →
+    * CONNACK, SUBSCRIBE `topicFilter` (packet id 1, QoS 0) → SUBACK, then
+    * counts down `subscribed` and hands every received PUBLISH to
+    * `onMessage(topic, payload)` until `open` turns false or the
+    * connection drops. */
+  private def subscribe(name: String, sock: Socket, clientId: String,
+      topicFilter: String, subscribed: CountDownLatch, open: => Boolean)(
+      onMessage: (String, String) => Unit): Thread = daemon(name) {
+    import Codec._
+    try {
+      val in = new DataInputStream(sock.getInputStream)
+      val out = new DataOutputStream(sock.getOutputStream)
+      val vh = concat(str("MQTT"), Array[Byte](4, 2, 0, 60))
+      writePacket(out, CONNECT, 0, concat(vh, str(clientId)))
+      require(readPacket(in).ptype == CONNACK, "no CONNACK")
+      writePacket(out, SUBSCRIBE, 2,
+        concat(Array[Byte](0, 1), str(topicFilter), Array[Byte](0)))
+      require(readPacket(in).ptype == SUBACK, "no SUBACK")
+      subscribed.countDown()
+      while (open) {
+        val p = readPacket(in)
+        if (p.ptype == PUBLISH) {
+          val (topic, off) = readStr(p.body, 0)
+          onMessage(topic, new String(p.body, off, p.body.length - off, UTF_8))
+        }
+      }
+    } catch { case _: Exception => () }
   }
 
   private def daemon(name: String)(f: => Unit): Thread = {

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 
@@ -99,21 +100,10 @@ object Replay {
       Seq(("replay-0.parquet", col("ts") <= tMid, 1000000L),
           ("replay-1.parquet", col("ts") > tMid, 2000000L)))
     corpusP.unpersist()
-    val outDir = tmpRoot.resolve("kit_out").toString
-    graft.Session.withConfs(spark, stateConfs(sfDir)) {
-      val q = KitState(
-          spark.readStream.schema(corpus.schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-            .as[KitState.KitEvent].groupByKey(_.kit),
-          rateS, staticThreshold, geoPrefix)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", tmpRoot.resolve("kit_ckpt").toString)
-        .format("parquet").option("path", outDir)
-        .outputMode("append")
-        .start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(outDir).select(col("kit"), col("ts"), col("value"),
+    replayToParquet(spark, "kit", corpus.schema, inDir, stateConfs(sfDir)) { in =>
+      KitState(in.as[KitState.KitEvent].groupByKey(_.kit),
+        rateS, staticThreshold, geoPrefix).toDF()
+    }.select(col("kit"), col("ts"), col("value"),
       col("accepted"), col("reason"),
       col("intervalEst").as("interval_est"),
       col("staticRun").as("static_run"), col("moved"))
@@ -187,20 +177,6 @@ object Replay {
     }
   }
 
-  /** J2 stream-static enrichment replayed over a REAL micro-batch
-    * boundary (reference: KitCache metadata lookup per telegram,
-    * lib/MyMQTTclient.py:606-827 — AccessInfo `:724` resolves each
-    * telegram's kit against the DB-backed cache, unregistered/inactive
-    * kits drop, `:1694-1700`). Spark-first shape: the telegram stream
-    * broadcast-joins the metadata dimension; Structured Streaming
-    * re-evaluates the static side per micro-batch, which is exactly the
-    * reference's TTL'd cache re-read.
-    *
-    * The join is stateless, so stream output must equal the batch join —
-    * that equality is the oracle (q92): supplier plays the kit registry,
-    * kit_key = user_id % 100 (events kits fold onto the registry domain
-    * at any MakeScale multiplier — replicas are new kits with the same
-    * registry rows), active = s_suppkey % 3 ≠ 0. */
   /** Stages `files` (name, row predicate, mtime) as single parquet files
     * under `<prefix>_in`, mtime-ordered for the file source's
     * oldest-first replay. Shared by every replay entry point; `corpus`
@@ -237,6 +213,43 @@ object Replay {
     inDir
   }
 
+  /** Streams the files [[stageReplayFiles]] staged for `prefix`, one
+    * file per micro-batch until drained (`AvailableNow`), through
+    * `transform` into an append-mode parquet sink under `<prefix>_out`
+    * (checkpoint `<prefix>_ckpt`), with the session confs `confs` set
+    * while the stream is planned and runs; returns the sink read back. */
+  private def replayToParquet(spark: SparkSession, prefix: String,
+      schema: StructType, inDir: java.nio.file.Path,
+      confs: Seq[(String, String)] = Nil)(
+      transform: DataFrame => DataFrame): DataFrame = {
+    val outDir = tmpRoot.resolve(s"${prefix}_out").toString
+    graft.Session.withConfs(spark, confs) {
+      val q = transform(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir.toString))
+        .writeStream.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", tmpRoot.resolve(s"${prefix}_ckpt").toString)
+        .format("parquet").option("path", outDir)
+        .outputMode("append")
+        .start()
+      q.awaitTermination()
+    }
+    spark.read.parquet(outDir)
+  }
+
+  /** J2 stream-static enrichment replayed over a REAL micro-batch
+    * boundary (reference: KitCache metadata lookup per telegram,
+    * lib/MyMQTTclient.py:606-827 — AccessInfo `:724` resolves each
+    * telegram's kit against the DB-backed cache, unregistered/inactive
+    * kits drop, `:1694-1700`). Spark-first shape: the telegram stream
+    * broadcast-joins the metadata dimension; Structured Streaming
+    * re-evaluates the static side per micro-batch, which is exactly the
+    * reference's TTL'd cache re-read.
+    *
+    * The join is stateless, so stream output must equal the batch join —
+    * that equality is the oracle (q92): supplier plays the kit registry,
+    * kit_key = user_id % 100 (events kits fold onto the registry domain
+    * at any MakeScale multiplier — replicas are new kits with the same
+    * registry rows), active = s_suppkey % 3 ≠ 0. */
   def replayStreamEnrich(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = Tables.events(spark, sfDir).select(
       col("event_id"), (col("user_id") % 100).as("kit_key"),
@@ -252,49 +265,13 @@ object Replay {
       Seq(("replay-0.parquet", col("ts") <= tMid, 1000000L),
           ("replay-1.parquet", col("ts") > tMid, 2000000L)))
     corpus.unpersist()
-    val outDir = tmpRoot.resolve("enrich_out").toString
-    val q = spark.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      .join(dim, Seq("kit_key"), "left")
-      .where(col("active")) // inactive/unregistered kits drop
-      .select(col("event_id"), col("kit_key"), col("project"), col("value"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", tmpRoot.resolve("enrich_ckpt").toString)
-      .format("parquet").option("path", outDir)
-      .outputMode("append")
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+    replayToParquet(spark, "enrich", corpus.schema, inDir) {
+      _.join(dim, Seq("kit_key"), "left")
+        .where(col("active")) // inactive/unregistered kits drop
+        .select(col("event_id"), col("kit_key"), col("project"), col("value"))
+    }
   }
 
-  /** §2.8 event-time watermark semantics replayed over REAL micro-batch
-    * boundaries, oracle-checkable in closed form (q94).
-    *
-    * Three staged files force every row fate the watermark state machine
-    * has (measured on this engine — a naive two-file split exercises
-    * NONE of them: aggregation state is only evicted once the watermark
-    * passes a window's end, and a "late" row is only dropped when its
-    * window has already been finalized, so late rows arriving in the
-    * same batch that would finalize their window still merge):
-    *
-    *   file 0: even ids (full time range)   — builds state, wm still 0
-    *   file 1: odd ids with ts > W1 (fresh) — runs at wm = W1, merges,
-    *           and its commit evicts+emits every window ending ≤ W1
-    *   file 2: odd ids with ts ≤ W1 (late)  — runs at wm = W2; every row
-    *           whose window closed under the watermark MUST drop
-    *
-    * with W1 = max(even ts) − delta, W2 = max(even ∪ fresh ts) − delta.
-    * The output is then a pure function of the data:
-    *   emitted = {windows over even ∪ fresh | window_end ≤ W2}
-    * (a file-2 row with window_end > W2 may merge, but its window is
-    * never emitted — the terminal flush stops at W2 — so the closed form
-    * is exact either way). `delta` sits off the hour grid (37 min), and
-    * because a watermark could still tie a window boundary on adversarial
-    * data (max even ts at exactly hh:37:00.000000), both watermarks are
-    * checked driver-side and the replay FAILS LOUDLY on a tie — Spark's
-    * ≤-vs-< edge choice would otherwise diverge from the oracle's `≤`
-    * silently (one window of hash mismatch on measure-zero data beats an
-    * unexplainable red gate). */
   /** §2.9 U1's STREAMING variant — `dropDuplicatesWithinWatermark` over
     * REAL micro-batch boundaries, every row fate deterministic in closed
     * form (q97). This is the dedup shape a 100 TB ingest actually runs:
@@ -399,22 +376,12 @@ object Replay {
           ("replay-2.parquet", f2Pred, 3000000L),
           ("replay-3.parquet", !even && !f1Pred && !f2Pred, 4000000L)))
     corpus.unpersist()
-    val outDir = tmpRoot.resolve("dedup_out").toString
-    graft.Session.withConfs(spark, stateConfs(sfDir)) {
-      val q = spark.readStream.schema(corpus.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-        .withWatermark("ts", s"$delayMin minutes")
+    replayToParquet(spark, "dedup", corpus.schema, inDir, stateConfs(sfDir)) {
+      _.withWatermark("ts", s"$delayMin minutes")
         .dropDuplicatesWithinWatermark("key")
         .select(col("event_id"), col("key"),
           unix_timestamp(col("ts")).as("ts"), col("value"))
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", tmpRoot.resolve("dedup_ckpt").toString)
-        .format("parquet").option("path", outDir)
-        .outputMode("append")
-        .start()
-      q.awaitTermination()
     }
-    spark.read.parquet(outDir)
   }
 
   /** §2.8 W5's STREAMING leg — native `session_window` sessionization
@@ -539,11 +506,8 @@ object Replay {
           ("replay-4.parquet", col("cls") === "fb", 5000000L),
           ("replay-5.parquet", col("cls") === "f4", 6000000L)))
     corpus.unpersist(); ev.unpersist()
-    val outDir = tmpRoot.resolve("sess_out").toString
-    graft.Session.withConfs(spark, stateConfs(sfDir)) {
-      val q = spark.readStream.schema(corpus.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-        .withWatermark("ts", s"$delaySec seconds")
+    replayToParquet(spark, "sess", corpus.schema, inDir, stateConfs(sfDir)) {
+      _.withWatermark("ts", s"$delaySec seconds")
         .groupBy(session_window(col("ts"), s"$gapSec seconds"), col("skey"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,6)")).cast("double").as("s"))
@@ -551,16 +515,37 @@ object Replay {
           unix_timestamp(col("session_window.start")).as("session_start"),
           unix_timestamp(col("session_window.end")).as("session_end"),
           col("n"), col("s"))
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", tmpRoot.resolve("sess_ckpt").toString)
-        .format("parquet").option("path", outDir)
-        .outputMode("append")
-        .start()
-      q.awaitTermination()
     }
-    spark.read.parquet(outDir)
   }
 
+  /** §2.8 event-time watermark semantics replayed over REAL micro-batch
+    * boundaries, oracle-checkable in closed form (q94).
+    *
+    * Three staged files force every row fate the watermark state machine
+    * has (measured on this engine — a naive two-file split exercises
+    * NONE of them: aggregation state is only evicted once the watermark
+    * passes a window's end, and a "late" row is only dropped when its
+    * window has already been finalized, so late rows arriving in the
+    * same batch that would finalize their window still merge):
+    *
+    *   file 0: even ids (full time range)   — builds state, wm still 0
+    *   file 1: odd ids with ts > W1 (fresh) — runs at wm = W1, merges,
+    *           and its commit evicts+emits every window ending ≤ W1
+    *   file 2: odd ids with ts ≤ W1 (late)  — runs at wm = W2; every row
+    *           whose window closed under the watermark MUST drop
+    *
+    * with W1 = max(even ts) − delta, W2 = max(even ∪ fresh ts) − delta.
+    * The output is then a pure function of the data:
+    *   emitted = {windows over even ∪ fresh | window_end ≤ W2}
+    * (a file-2 row with window_end > W2 may merge, but its window is
+    * never emitted — the terminal flush stops at W2 — so the closed form
+    * is exact either way). `delta` sits off the hour grid (37 min), and
+    * because a watermark could still tie a window boundary on adversarial
+    * data (max even ts at exactly hh:37:00.000000), both watermarks are
+    * checked driver-side and the replay FAILS LOUDLY on a tie — Spark's
+    * ≤-vs-< edge choice would otherwise diverge from the oracle's `≤`
+    * silently (one window of hash mismatch on measure-zero data beats an
+    * unexplainable red gate). */
   def replayWatermarkAgg(spark: SparkSession, sfDir: String,
                          deltaMin: Int = 37, windowMin: Int = 60): DataFrame = {
     val corpus = Tables.events(spark, sfDir).select(
@@ -593,11 +578,8 @@ object Replay {
           ("replay-1.parquet", !even && col("ts") > lit(w1), 2000000L),
           ("replay-2.parquet", !even && col("ts") <= lit(w1), 3000000L)))
     corpus.unpersist()
-    val outDir = tmpRoot.resolve("wm_out").toString
-    graft.Session.withConfs(spark, stateConfs(sfDir)) {
-      val q = spark.readStream.schema(corpus.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-        .withWatermark("ts", s"$deltaMin minutes")
+    replayToParquet(spark, "wm", corpus.schema, inDir, stateConfs(sfDir)) {
+      _.withWatermark("ts", s"$deltaMin minutes")
         .groupBy(window(col("ts"), s"$windowMin minutes"), col("kit"))
         // decimal-exact sum: addition order differs between engines (and
         // across Spark shuffles), doubles would hash-flap at the 15th digit
@@ -605,13 +587,6 @@ object Replay {
           sum(col("value").cast("decimal(18,6)")).cast("double").as("s"))
         .select(unix_timestamp(col("window.start")).as("w_start"),
           col("kit"), col("n"), col("s"))
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", tmpRoot.resolve("wm_ckpt").toString)
-        .format("parquet").option("path", outDir)
-        .outputMode("append")
-        .start()
-      q.awaitTermination()
     }
-    spark.read.parquet(outDir)
   }
 }

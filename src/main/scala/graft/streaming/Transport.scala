@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first re-expression: every transport yields the same one-column
   * streaming DataFrame (`value: STRING`, one telegram per row) that feeds
-  * `TtnEnvelope.parse`. The transports:
+  * `TtnEnvelope.parseBest`. The transports:
   *
   *  - [[Transport.Kafka]] — the production pub/sub path. TTN's MQTT fan-in
   *    is bridged to Kafka in any at-scale deployment (per-topic telegram

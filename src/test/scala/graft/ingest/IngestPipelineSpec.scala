@@ -20,7 +20,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     assume(Files.exists(Paths.get(stress)))
     import spark.implicits._
 
-    val env = TtnEnvelope.parse(spark.read.text(stress), col("value"))
+    val env = TtnEnvelope.parseBest(spark.read.text(stress), col("value"))
     val n = env.count()
     assert(n >= 100, s"expected >=100 telegrams, got $n")
     // Every record resolves ids and a payload.
@@ -46,13 +46,13 @@ class IngestPipelineSpec extends AnyFunSuite {
       Set("pm25", "pm10", "temperature", "humidity", "pressure")).nonEmpty)
     assert(long.where(col("value").isNaN).count() == 0)
     // Gateway selection produced a best gateway wherever gateways exist.
-    assert(env.where(size(col("gateways")) > 0 && col("best_gateway").isNull)
+    assert(env.where(col("n_gateways") > 0 && col("best_gateway").isNull)
       .count() == 0)
   }
 
   test("socket transport feeds the identical parse pipeline (S1 live swap)") {
     // The MQTT subscribe source is a transport swap: the same
-    // TtnEnvelope.parse projection runs over any line stream. Spark's
+    // TtnEnvelope.parseBest projection runs over any line stream. Spark's
     // built-in socket source IS such a live transport (localhost only —
     // zero egress), so this proves the swap with real streaming I/O
     // rather than file replay.
@@ -80,7 +80,7 @@ class IngestPipelineSpec extends AnyFunSuite {
 
     val stream = graft.streaming.Transport.lines(spark,
       graft.streaming.Transport.Socket(loopback.getHostAddress, server.getLocalPort))
-    val q = TtnEnvelope.parse(stream, col("value"))
+    val q = TtnEnvelope.parseBest(stream, col("value"))
       .select("app_id", "dev_id", "port", "payload")
       .writeStream.format("memory").queryName("socket_env")
       .outputMode("append").start()

@@ -229,16 +229,17 @@ class LoRaDecodeSpec extends AnyFunSuite {
     val p = Paths.get(fixtureDir, "inputtestP4.mqtt")
     assume(Files.exists(p))
     val df = spark.read.text(p.toString)
-    val env = TtnEnvelope.parse(df, col("value"))
-    val rows = env.collect()
+    val rows = TtnEnvelope.parseBest(df, col("value")).collect()
     assert(rows.length >= 2)
     val r = rows.head
     assert(r.getAs[String]("app_id") == "201802215971az")
     assert(r.getAs[Int]("port") == 4)
     assert(r.getAs[Array[Byte]]("payload").nonEmpty)
     assert(r.getAs[String]("best_gateway") != null)
-    // single-gateway record: best score == 10*snr + 0.2*rssi of that gw
-    val gws = r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("gateways")
+    // single-gateway record: best score == 10*snr + 0.2*rssi of that gw,
+    // read from the reference parse's gateway array
+    val gws = TtnEnvelope.parseJackson(df, col("value")).head()
+      .getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("gateways")
     if (gws.length == 1)
       assert(math.abs(r.getAs[Double]("best_score") -
         (gws.head.getAs[Double]("snr") * 10 + gws.head.getAs[Double]("rssi") * 0.2)) < 0.01)
@@ -248,7 +249,7 @@ class LoRaDecodeSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val v3 = """v3/app1@ttn/devices/dev1/up {"end_device_ids":{"device_id":"dev1","application_ids":{"application_id":"app1"}},"received_at":"2021-08-20T12:00:00Z","uplink_message":{"f_port":12,"f_cnt":7,"frm_payload":"AAEAqwKyBAY=","rx_metadata":[{"gateway_ids":{"gateway_id":"gw1"},"rssi":-100,"snr":5.5}]}}"""
-    val env = TtnEnvelope.parse(Seq(v3).toDF("value"), col("value")).head()
+    val env = TtnEnvelope.parseBest(Seq(v3).toDF("value"), col("value")).head()
     assert(env.getAs[String]("app_id") == "app1")
     assert(env.getAs[String]("dev_id") == "dev1")
     assert(env.getAs[Int]("port") == 12)

@@ -2,22 +2,27 @@ package graft.ingest
 
 import scala.util.Random
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
 /** Differential fuzz of the native single-pass envelope parser
-  * ([[TtnFastJson]] via TtnEnvelope.parse) against the Jackson
-  * `from_json` composition it replaced ([[TtnEnvelope.parseJackson]]).
+  * ([[TtnFastJson]] via TtnEnvelope.parseBest) against the Jackson
+  * `from_json` composition it replaced ([[TtnEnvelope.parseJackson]],
+  * whose gateway array is reduced by `size` and the HOF argmax
+  * `array_max(transform(gws, g -> struct(score, gtw_id)))`).
   * The generator covers the envelope contract's agreement domain:
   * arbitrary key order, inter-token whitespace, JSON escapes (incl.
   * \uXXXX and surrogate pairs) and literal multi-byte UTF-8, unknown
   * extra fields (scalar/object/array/bool), null and missing branches,
-  * empty gateway arrays, null gateway ELEMENTS (the arrays_zip
-  * struct(null,null,null) contract), duplicate keys (last wins), and
-  * malformed lines (truncation, trailing garbage, bare non-object) —
-  * both paths must null the row identically. */
+  * empty gateway arrays, null gateway ELEMENTS, duplicate keys (last
+  * wins), and malformed lines (truncation, trailing garbage, bare
+  * non-object) — both paths must null the row identically. The argmax
+  * edges ([[GatewayEdges]]: exact ties, null scores, null ids, null and
+  * all-null elements, empty and null arrays) are compared in both
+  * envelope versions, under codegen and interpreted eval. */
 class TtnFastJsonSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -207,15 +212,21 @@ class TtnFastJsonSpec extends AnyFunSuite {
     all
   }
 
-  test("native parse == Jackson parse over the fuzz corpus") {
-    import spark.implicits._
-    val df = spark.createDataset(lines(seed = 20260814L, nPerKind = 400)).toDF("line")
-      .repartition(8).cache()
-    val nat = TtnEnvelope.parse(df, col("line"))
-    val jak = TtnEnvelope.parseJackson(df, col("line"))
+  /** [[TtnEnvelope.parseJackson]] reduced to [[TtnEnvelope.parseBest]]'s
+    * frame: `n_gateways` is the null-safe `size` of the gateway array
+    * (null, not -1, for a null array), in parseBest's column order. */
+  private def reference(df: DataFrame, cols: Seq[String]): DataFrame =
+    TtnEnvelope.parseJackson(df, col("line"))
+      .withColumn("n_gateways",
+        when(col("gateways").isNull, lit(null)).otherwise(size(col("gateways"))))
+      .select(cols.map(col): _*)
+
+  /** Every line's parseBest row equals its reference row, joined on the
+    * (unique) topic and compared null-safely column by column. */
+  private def assertParity(df: DataFrame): Unit = {
+    val nat = TtnEnvelope.parseBest(df, col("line"))
     val cols = nat.columns.toSeq
-    assert(cols == jak.columns.toSeq)
-    // join on topic (unique per line) and compare every column null-safely
+    val jak = reference(df, cols)
     val j = nat.as("n").join(jak.as("j"), col("n.topic") === col("j.topic"))
     val mismatchCond = cols.filter(_ != "topic")
       .map(c => !(col(s"n.$c") <=> col(s"j.$c"))).reduce(_ || _)
@@ -225,56 +236,59 @@ class TtnFastJsonSpec extends AnyFunSuite {
       .take(5)
     assert(bad.isEmpty, s"native vs jackson divergence:\n${bad.mkString("\n")}")
     assert(j.count() == df.count(), "row loss in one of the parse paths")
-    df.unpersist()
+  }
+
+  /** Interpreted expression eval: wholeStage=false alone still runs
+    * codegen'd projections, NO_CODEGEN forces the interpreted path. */
+  private def interpreted[T](body: => T): T =
+    graft.Session.withConfs(spark, Seq(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))(body)
+
+  private def fuzzCorpus(seed: Long): DataFrame = {
+    import spark.implicits._
+    spark.createDataset(lines(seed, nPerKind = 400)).toDF("line").repartition(8)
+  }
+
+  private def edgeFrame: DataFrame = {
+    import spark.implicits._
+    spark.createDataset(GatewayEdges.lines).toDF("line")
+  }
+
+  test("native parse == Jackson parse over the fuzz corpus") {
+    assertParity(fuzzCorpus(20260814L))
   }
 
   test("q76 fixture lines: native == Jackson exactly") {
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.001")
     val fx = graft.SparkEntry.ttnFixtureLines(ev).cache()
-    val nat = TtnEnvelope.parse(fx, col("line"))
-    val jak = TtnEnvelope.parseJackson(fx, col("line"))
-    val cols = nat.columns.toSeq
-    val j = nat.as("n").join(jak.as("j"), col("n.topic") === col("j.topic"))
-    val mismatchCond = cols.filter(_ != "topic")
-      .map(c => !(col(s"n.$c") <=> col(s"j.$c"))).reduce(_ || _)
-    assert(j.where(mismatchCond).isEmpty, "fixture divergence")
-    assert(j.count() == fx.count())
+    assertParity(fx)
     fx.unpersist()
   }
 
   test("fused parseBest == unfused parse + size + best_gateway composition") {
-    import spark.implicits._
-    val df = spark.createDataset(lines(seed = 20260815L, nPerKind = 400)).toDF("line")
-      .repartition(8).cache()
-    val fused = TtnEnvelope.parseBest(df, col("line"))
-    // the composition parseBest replaces: unfused parse, then size()
-    // (null-safe — parseBest's n_gateways is null for a null array) and
-    // the best_gateway argmax + round, exactly as q76 consumed them
-    val unf = TtnEnvelope.parse(df, col("line"))
-      .withColumn("n_gateways",
-        when(col("gateways").isNull, lit(null)).otherwise(size(col("gateways"))))
-      .withColumn("best_score", round(col("best_score"), 2))
-      .drop("gateways", "payload")
-    val fusedCols = fused.drop("payload")
-    val cols = fusedCols.columns.toSeq
-    assert(cols.toSet == unf.columns.toSet)
-    val j = fusedCols.as("f").join(unf.as("u"), col("f.topic") === col("u.topic"))
-    val mismatchCond = cols.filter(_ != "topic")
-      .map(c => !(col(s"f.$c") <=> col(s"u.$c"))).reduce(_ || _)
-    val bad = j.where(mismatchCond)
-      .select(col("f.topic"), struct(cols.map(c => col(s"f.$c")): _*).as("fused"),
-        struct(cols.map(c => col(s"u.$c")): _*).as("unfused"))
-      .take(5)
-    assert(bad.isEmpty, s"fused vs unfused divergence:\n${bad.mkString("\n")}")
-    assert(j.count() == df.count(), "row loss in one of the parse paths")
-    df.unpersist()
+    // the reference is the unfused composition the fused parse replaced:
+    // from_json, then size() and the HOF best_gateway argmax + round
+    assertParity(fuzzCorpus(20260815L))
+  }
+
+  test("gateway argmax edges, V2 and V3 envelopes: native == Jackson") {
+    // the winners themselves are asserted in GatewayExpressionsSpec
+    assertParity(edgeFrame)
+  }
+
+  test("interpreted eval: native == Jackson on edges and fuzz corpus") {
+    interpreted {
+      assertParity(edgeFrame)
+      assertParity(fuzzCorpus(20260814L))
+    }
   }
 
   test("malformed lines null the whole envelope frame") {
     import spark.implicits._
     val df = spark.createDataset(Seq(
       "t/1 {\"app_id\":\"x\"", "t/2 [1]", "t/3 zzz")).toDF("line")
-    val out = TtnEnvelope.parse(df, col("line")).collect()
+    val out = TtnEnvelope.parseBest(df, col("line")).collect()
     assert(out.length == 3)
     out.foreach { r =>
       (1 until r.length).foreach(i => assert(r.isNullAt(i), s"field $i of $r"))
@@ -282,7 +296,7 @@ class TtnFastJsonSpec extends AnyFunSuite {
     // trailing garbage past the first complete object is IGNORED — the
     // measured from_json contract, matched by the native parser
     val t = spark.createDataset(Seq("t/4 {\"app_id\":\"x\"} extra")).toDF("line")
-    val r = TtnEnvelope.parse(t, col("line")).select(col("app_id")).collect().head
+    val r = TtnEnvelope.parseBest(t, col("line")).select(col("app_id")).collect().head
     assert(r.getString(0) == "x")
   }
 }

@@ -70,4 +70,22 @@ class WindowOpsSpec extends AnyFunSuite {
       ("B", 50L, 150L, 1L, 5.0)),
       s"session boundary semantics drifted: ${out.mkString(", ")}")
   }
+
+  test("q99: sub-second gap over the limit merges on whole seconds") {
+    // 13347.5 - 1000.2 = 12347.3 s is over q99's 12347 s gap, but in the
+    // oracle's whole seconds (epoch_us(ts)//1000000) it is 13347 - 1000 =
+    // 12347, which merges: one session, bounds in whole seconds.
+    val base = 1700000000L
+    val dir = graft.Scratch.tempDir("graft_q99_spec_")
+    Seq((7L, base + 1000, 200000L, 1.5), (7L, base + 13347, 500000L, 2.5))
+      .toDF("user_id", "sec", "us", "value")
+      .select(col("user_id"),
+        timestamp_micros(col("sec") * 1000000L + col("us")).as("ts"), col("value"))
+      .write.parquet(dir.resolve("events.parquet").toString)
+    val out = graft.SparkEntry.queries("q99_session_windows")(spark, dir.toString)
+      .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_start"),
+        r.getAs[Long]("session_end"), r.getAs[Long]("n"), r.getAs[Double]("s")))
+    assert(out.toSeq == Seq((7L, base + 1000, base + 13347 + 12347, 2L, 4.0)),
+      s"q99 split a whole-second session: ${out.mkString(", ")}")
+  }
 }

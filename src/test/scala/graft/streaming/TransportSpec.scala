@@ -36,7 +36,7 @@ class TransportSpec extends AnyFunSuite {
       assert(df.schema.map(f => (f.name, f.dataType.typeName)) ==
         Seq(("value", "string")))
       // the telegram stream must bind into the parse pipeline unchanged
-      val parsed = TtnEnvelope.parse(df, col("value"))
+      val parsed = TtnEnvelope.parseBest(df, col("value"))
       assert(parsed.columns.contains("dev_id"))
     } else {
       val e = intercept[Exception] {
@@ -59,7 +59,7 @@ class TransportSpec extends AnyFunSuite {
     Files.copy(Paths.get(stress), dir.resolve("dump-0.txt"),
       StandardCopyOption.REPLACE_EXISTING)
 
-    val parsed = TtnEnvelope.parse(
+    val parsed = TtnEnvelope.parseBest(
       Transport.lines(spark, Transport.FileReplay(dir.toString)), col("value"))
       .select("app_id", "dev_id", "port", "payload")
     val q = parsed.writeStream.format("memory").queryName("transport_replay")
@@ -68,7 +68,7 @@ class TransportSpec extends AnyFunSuite {
       .start()
     q.awaitTermination()
 
-    val batch = TtnEnvelope.parse(spark.read.text(stress), col("value"))
+    val batch = TtnEnvelope.parseBest(spark.read.text(stress), col("value"))
       .select("app_id", "dev_id", "port", "payload")
     val streamed = spark.table("transport_replay")
     assert(streamed.count() == batch.count(),
@@ -90,7 +90,7 @@ class TransportSpec extends AnyFunSuite {
 
     val union = Transport.lines(spark,
       Seq(Transport.FileReplay(dirA.toString), Transport.FileReplay(dirB.toString)))
-    val q = TtnEnvelope.parse(union, col("value"))
+    val q = TtnEnvelope.parseBest(union, col("value"))
       .select("app_id", "dev_id", "port", "payload")
       .writeStream.format("memory").queryName("transport_union")
       .outputMode("append")

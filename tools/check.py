@@ -8,8 +8,12 @@ matching oracle SQL from <outDir>/oracle_sql.json in DuckDB against the
 same sf tables, canonicalizes both (sort columns by name, round floats
 to 4 decimals, sort rows), and diffs. DuckDB here is a dev-time checker
 only — the engine itself is pure Scala/Spark.
+
+DuckDB's limits come from the host: one thread per usable core, half of
+the memory (MemTotal, or a lower cgroup limit), and a spill directory
+under <outDir> that is removed at exit. They are printed once.
 """
-import sys, os, json, glob
+import sys, os, json, glob, atexit, shutil, tempfile
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -31,18 +35,37 @@ def canon(cols, rows):
     out.sort()
     return [cols[i] for i in order], out
 
+def host_memory_bytes():
+    with open("/proc/meminfo") as f:
+        total = next(int(l.split()[1]) * 1024 for l in f
+                     if l.startswith("MemTotal:"))
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            return min(total, int(f.read()))
+    except (OSError, ValueError):  # no cgroup v2 limit, or "max"
+        return total
+
+def connect(out_dir):
+    tmp = tempfile.mkdtemp(prefix=".duckdb_tmp_", dir=out_dir)
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    limits = {"threads": len(os.sched_getaffinity(0)),
+              "memory_limit": f"{host_memory_bytes() // 2 >> 20}MiB",
+              "temp_directory": tmp}
+    print("duckdb: " + ", ".join(f"{k}={v}" for k, v in limits.items()))
+    return duckdb.connect(config=limits)
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
-    con = duckdb.connect()
+    names = sorted(d for d in os.listdir(out_dir)
+                   if os.path.isdir(os.path.join(out_dir, d)))
+    con = connect(out_dir)
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_ok = n_bad = n_skip = 0
-    names = sorted(d for d in os.listdir(out_dir)
-                   if os.path.isdir(os.path.join(out_dir, d)))
     for name in names:
         if only and name not in only:
             continue
