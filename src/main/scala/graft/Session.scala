@@ -84,11 +84,14 @@ object Session {
       // the next decade.
       "spark.sql.autoBroadcastJoinThreshold" -> "64m",
       // Generated-class cache (a static conf; Spark's default is 100
-      // entries). The ten corpus-curation queries compile about 171
-      // classes per pass under this session (local mode compiles each
-      // whole-stage class twice, from a driver and an executor thread):
-      // at 100 entries every warm pass recompiled 103–128 of them, at
-      // 1000 none (measured on 4 cores over sf0.01 ×3).
+      // entries). Spark 4.1's `CodeGenerator` cache is keyed by (context
+      // class loader, source), so local mode compiles each whole-stage
+      // class twice: once for the driver's stage thread and once for an
+      // executor task thread. A warm pass of the ten corpus-curation
+      // queries needs 128 keys (80 distinct sources), so at 100 entries
+      // every warm pass recompiled 103–128 classes, about 1.35 s of
+      // summed compile time; at 1000 it recompiled none, and a warm pass
+      // fell from 3.7–4.5 s to 2.5–3.3 s (4 cores, sf0.01 ×3).
       "spark.sql.codegen.cache.maxEntries" -> "1000")
       .filterNot { case (k, _) => sys.props.contains(k) }
   }

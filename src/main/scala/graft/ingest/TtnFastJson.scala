@@ -107,6 +107,7 @@ object TtnFastJson {
             if (sNull && nullScore) 0
             else if (sNull) -1
             else if (nullScore) 1
+            else if (s == score) 0 // Spark's double order: -0.0 ties 0.0
             else java.lang.Double.compare(s, score)
           if (c != 0) c > 0
           else if (gid == null) false

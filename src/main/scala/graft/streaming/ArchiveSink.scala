@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -104,10 +105,25 @@ object ArchiveSink {
     }
   }
 
-  /** Read the archive back without the internal partition column. */
-  def read(spark: SparkSession, dir: String): DataFrame =
-    scan(spark, dir, readLayout(fileSystem(spark, dir), new Path(dir, BucketsMarker))
+  /** Read the archive back without the internal partition column.
+    *
+    * An archive whose bytes fit in one split
+    * (`spark.sql.files.maxPartitionBytes`) is read as one partition: the
+    * scan would otherwise run a task per bucket file (a small split floor
+    * sits below the per-file open cost, so files are not packed) and
+    * report unknown partitioning, so every aggregate over it would add an
+    * exchange and a second job. One partition reports `SinglePartition`,
+    * which satisfies any aggregate's distribution. The byte count is the
+    * scan's own file listing, so this adds no filesystem walk and no job.
+    * A larger archive keeps the scan's splits and plan unchanged. */
+  def read(spark: SparkSession, dir: String): DataFrame = {
+    val df = scan(spark, dir, readLayout(fileSystem(spark, dir), new Path(dir, BucketsMarker))
       .flatMap(_.schema)).drop(PartCol)
+    val bytes = df.queryExecution.analyzed.collectFirst {
+      case r: LogicalRelation => r.relation.sizeInBytes }
+    if (bytes.exists(_ <= spark.sessionState.conf.filesMaxPartitionBytes)) df.coalesce(1)
+    else df
+  }
 
   /** Test seam: when ≥ 0, the swap loop throws after PARKING the Nth
     * touched bucket and before renaming its replacement in — the exact

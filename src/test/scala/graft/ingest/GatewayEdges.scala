@@ -2,9 +2,9 @@ package graft.ingest
 
 /** The best-gateway argmax edge table shared by [[TtnFastJsonSpec]] and
   * `graft.plans.GatewayExpressionsSpec`: exact score ties (broken by the
-  * larger id), null score components, null ids, null and all-null
-  * elements, empty and null arrays. Elements are (gtw_id, rssi, snr),
-  * None for a null element; None for a null array. */
+  * larger id, also between 0.0 and −0.0), null score components, null
+  * ids, null and all-null elements, empty and null arrays. Elements are
+  * (gtw_id, rssi, snr), None for a null element; None for a null array. */
 object GatewayEdges {
   type Gw = Option[(String, java.lang.Double, java.lang.Double)]
   private def gw(id: String, rssi: java.lang.Double, snr: java.lang.Double): Gw =
@@ -22,7 +22,9 @@ object GatewayEdges {
     "null_id_loses_tie" -> Some(Seq(gw(null, -50.0, 5.0), gw("b", -50.0, 5.0))),
     "null_element" -> Some(Seq(None, gw("b", -70.0, 2.0))),
     "close_scores" -> Some(Seq(gw("gw1", -119.9, -10.0), gw("gw0", -119.8, -10.0))),
-    "all_null_elements" -> Some(Seq(None)))
+    "all_null_elements" -> Some(Seq(None)),
+    // -0.0 and 0.0 are equal scores, so the larger id wins the tie
+    "neg_zero_tie" -> Some(Seq(gw("a", 0.0, 0.0), gw("b", -0.0, -0.0))))
 
   private def q(s: String) = "\"" + s + "\""
   private def jsonNum(d: java.lang.Double) = if (d == null) "null" else d.toString

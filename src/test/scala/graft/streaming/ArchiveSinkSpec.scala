@@ -8,6 +8,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.TestAccess
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
@@ -17,11 +19,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{Session, TestSpark}
+import graft.operators.Resample
 
 /** The archive's layout marker pins its schema: reads and upserts use it
   * instead of inferring parquet footers, batches must match it, and the
-  * merge shuffles once. */
+  * merge shuffles once. An archive within one split reads as one
+  * partition. */
 class ArchiveSinkSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -31,19 +35,21 @@ class ArchiveSinkSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def marker(dir: String): Path = Paths.get(dir, "_graft_buckets")
 
-  /** md5 of every parquet file under `dir`, by relative path. */
-  private def checksums(dir: String): Map[String, String] = {
-    val root = Paths.get(dir)
-    val s = Files.walk(root)
+  /** Every parquet file under `dir`. */
+  private def parquetFiles(dir: String): Seq[Path] = {
+    val s = Files.walk(Paths.get(dir))
     try s.iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .map { p =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        root.relativize(p).toString ->
-          md.digest(Files.readAllBytes(p)).map("%02x".format(_)).mkString
-      }.toMap
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet")).toList
     finally s.close()
   }
+
+  /** md5 of every parquet file under `dir`, by relative path. */
+  private def checksums(dir: String): Map[String, String] =
+    parquetFiles(dir).map { p =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      Paths.get(dir).relativize(p).toString ->
+        md.digest(Files.readAllBytes(p)).map("%02x".format(_)).mkString
+    }.toMap
 
   private def sortedRows(df: DataFrame): Seq[Row] =
     df.collect().sortBy(_.getAs[Long]("id")).toSeq
@@ -152,6 +158,62 @@ class ArchiveSinkSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       jobsDuring(noop(rows)), "read + noop write runs only the noop write's jobs")
     assert(jobsDuring(ArchiveSink.read(spark, dir)) == 0)
     assert(jobsDuring(inferred(dir)) >= 1, "the inference job the marker saves")
+  }
+
+  /** A telegram-shaped archive: 60 kits, 90 minutes of readings, 4
+    * bucket files of a few KB each. */
+  private def telegramArchive(): String = {
+    val dir = newDir("telegram_")
+    val rows = for (k <- 0 until 60; m <- 0 until 90 by 5)
+      yield (s"kit$k", 1700000000L + m * 60L, k + m * 0.1)
+    ArchiveSink.upsert(rows.toDF("kit", "ts", "value"), dir, Seq("kit", "ts"), "ts",
+      numBuckets = 4)
+    dir
+  }
+
+  /** q02's hourly mean over the archive's epoch-second `ts`. */
+  private def hourly(df: DataFrame): DataFrame =
+    Resample.hourlyAvg(df.withColumn("t", timestamp_seconds(col("ts"))), col("t"), col("value"))
+
+  private def exchanges(df: DataFrame): Int =
+    collect(df.queryExecution.executedPlan) { case s: ShuffleExchangeLike => s }.size
+
+  private def sameAsInferred(read: DataFrame, dir: String): Unit = {
+    assert(read.schema == inferred(dir).schema)
+    assert(read.collect().map(_.toString).sorted.toSeq ==
+      inferred(dir).collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("an archive within one split reads as one partition; its hourly aggregate runs one job") {
+    val dir = telegramArchive()
+    val sizes = parquetFiles(dir).map(Files.size)
+    assert(sizes.size == 4 && sizes.sum <= spark.conf.get("spark.sql.files.maxPartitionBytes").toLong)
+    assert(jobsDuring(ArchiveSink.read(spark, dir)) == 0, "building the read runs no job")
+    val read = ArchiveSink.read(spark, dir)
+    assert(read.queryExecution.executedPlan.outputPartitioning == SinglePartition)
+    assert(read.queryExecution.toRdd.getNumPartitions == 1)
+    sameAsInferred(read, dir)
+    val agg = hourly(ArchiveSink.read(spark, dir))
+    assert(exchanges(agg) == 0, agg.queryExecution.executedPlan.treeString)
+    assert(jobsDuring(noop(agg)) == 1)
+    assert(agg.count() == 2 && agg.agg(sum("n")).head().getLong(0) == 60 * 18)
+  }
+
+  test("an archive larger than one split keeps a partition per bucket file and the exchange") {
+    val dir = telegramArchive()
+    val sizes = parquetFiles(dir).map(Files.size)
+    assert(sizes.max < sizes.sum)
+    Session.withConfs(spark, Seq("spark.sql.files.maxPartitionBytes" -> sizes.max.toString)) {
+      assert(jobsDuring(ArchiveSink.read(spark, dir)) == 0, "building the read runs no job")
+      val read = ArchiveSink.read(spark, dir)
+      assert(!read.queryExecution.optimizedPlan.exists(_.isInstanceOf[Repartition]))
+      assert(read.queryExecution.executedPlan.outputPartitioning != SinglePartition)
+      assert(read.queryExecution.toRdd.getNumPartitions == sizes.size)
+      sameAsInferred(read, dir)
+      val agg = hourly(ArchiveSink.read(spark, dir))
+      assert(exchanges(agg) == 1, agg.queryExecution.executedPlan.treeString)
+      assert(jobsDuring(noop(agg)) >= 2)
+    }
   }
 
   test("q36 archive buckets: unchanged to sf10, files of at most 1 GiB at 100 TB") {

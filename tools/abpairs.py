@@ -18,8 +18,13 @@ change won (ties count for neither). For a batch workload each record
 also carries the run's per-query median build and exec times, read from
 the samples of ``.bench_build/runs/<workload>-<seed>-t0/result.json``,
 and a second table prints their medians over the pairs per side, so a
-claim names the layer it moved. Exits 1 if any run is not
-``correct: true`` or printed no result line. Benchmark files are only read.
+claim names the layer it moved. For an ingest workload each record
+carries the run's median read and median read wait instead (from the
+``reads`` and ``read_waits`` of that result.json), and a second table
+prints their medians over the pairs per side: ``pass_s`` is the mean
+read, so this separates typical reads from tail reads. Exits 1 if any
+run is not ``correct: true`` or printed no result line. Benchmark files
+are only read.
 """
 import argparse
 import json
@@ -93,6 +98,45 @@ def query_medians(result_path):
             by_query.setdefault(s["query"], []).append(s)
     return {q: {layer: statistics.median(s[layer] for s in ss) for layer in LAYERS}
             for q, ss in by_query.items()}
+
+
+READS = (("read_s", "reads"), ("read_wait_s", "read_waits"))
+
+
+def read_medians(result_path):
+    """{"read_s", "read_wait_s"}: the medians of an ingest run's timed
+    reads and of their lock waits, from its result.json; None without
+    reads (a batch run has none)."""
+    try:
+        with open(result_path) as f:
+            res = json.load(f)
+    except (OSError, ValueError):
+        return None
+    if not res.get("reads"):
+        return None
+    return {name: statistics.median(res[key]) for name, key in READS}
+
+
+def summarize_reads(records):
+    """{"parent"|"change": {"read_s", "read_wait_s"}}: per side, the median
+    over pairs of each run's median read and read wait. Only pairs with
+    reads on both sides count; None if there are none."""
+    by_pair = {}
+    for r in records:
+        if r.get("reads"):
+            by_pair.setdefault(r["pair"], {})[r["side"]] = r["reads"]
+    pairs = [p for p in by_pair.values() if "parent" in p and "change" in p]
+    if not pairs:
+        return None
+    return {side: {name: statistics.median(p[side][name] for p in pairs) for name, _ in READS}
+            for side in ("parent", "change")}
+
+
+def format_reads(summary):
+    lines = [f"{'per run median':<16} {'parent':>10} {'change':>10}"]
+    for name, _ in READS:
+        lines.append(f"{name:<16} {summary['parent'][name]:>10.4g} {summary['change'][name]:>10.4g}")
+    return "\n".join(lines)
 
 
 def summarize_queries(records):
@@ -203,10 +247,14 @@ def main():
                 if result is None or result.get("correct") is not True:
                     bad += 1
                 rec = {"pair": i, "seed": seed, "side": side, "result": result}
-                queries = query_medians(os.path.join(
-                    root, ".bench_build", "runs", f"{args.workload}-{seed}-t0", "result.json"))
+                result_json = os.path.join(
+                    root, ".bench_build", "runs", f"{args.workload}-{seed}-t0", "result.json")
+                queries = query_medians(result_json)
                 if queries:
                     rec["queries"] = queries
+                reads = read_medians(result_json)
+                if reads:
+                    rec["reads"] = reads
                 res.write(json.dumps(rec) + "\n")
                 res.flush()
                 print(json.dumps(rec), flush=True)
@@ -216,6 +264,9 @@ def main():
     per_query = summarize_queries(records)
     if per_query:
         print(format_queries(per_query))
+    reads = summarize_reads(records)
+    if reads:
+        print(format_reads(reads))
     for side in ("parent", "change"):
         att = sum(r["result"].get("attempted", 0) for r in records if r["side"] == side)
         fail = sum(r["result"].get("failed", 0) for r in records if r["side"] == side)

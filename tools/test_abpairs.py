@@ -104,5 +104,40 @@ class QueryLayersTest(unittest.TestCase):
         self.assertIn("0.4500", table)
 
 
+class ReadsTest(unittest.TestCase):
+    def test_run_medians_from_an_ingest_result(self):
+        with tempfile.TemporaryDirectory() as d:
+            path = os.path.join(d, "result.json")
+            with open(path, "w") as f:
+                json.dump({"workload": "telegram_ingest", "samples": [],
+                           "reads": [0.09, 0.30, 0.08, 0.10, 0.07],
+                           "read_waits": [0.0, 0.4, 0.1, 0.0]}, f)
+            self.assertIsNone(abpairs.query_medians(path))
+            self.assertEqual(abpairs.read_medians(path),
+                             {"read_s": 0.09, "read_wait_s": 0.05})
+            with open(path, "w") as f:
+                json.dump({"samples": [sample("q1", 0.1, 1.0)]}, f)  # a batch run
+            self.assertIsNone(abpairs.read_medians(path))
+            self.assertIsNone(abpairs.read_medians(os.path.join(d, "missing.json")))
+
+    def test_medians_over_pairs_per_side(self):
+        def rec(pair, side, read_s, read_wait_s):
+            return {"pair": pair, "side": side,
+                    "reads": {"read_s": read_s, "read_wait_s": read_wait_s}}
+        records = [
+            rec(0, "parent", 0.11, 0.02), rec(0, "change", 0.08, 0.01),
+            rec(1, "change", 0.09, 0.03), rec(1, "parent", 0.12, 0.05),
+            rec(2, "parent", 0.10, 0.04), rec(2, "change", 0.07, 0.02),
+            rec(3, "parent", 9.0, 9.0),  # no change run: left out
+        ]
+        s = abpairs.summarize_reads(records)
+        self.assertAlmostEqual(s["parent"]["read_s"], 0.11)
+        self.assertAlmostEqual(s["parent"]["read_wait_s"], 0.04)
+        self.assertAlmostEqual(s["change"]["read_s"], 0.08)
+        self.assertAlmostEqual(s["change"]["read_wait_s"], 0.02)
+        self.assertIn("0.11 ", abpairs.format_reads(s))
+        self.assertIsNone(abpairs.summarize_reads(records[-1:]))
+
+
 if __name__ == "__main__":
     unittest.main()
