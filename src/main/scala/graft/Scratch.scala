@@ -59,7 +59,7 @@ object Scratch {
 
   /** Best-effort recursive delete that tolerates entries vanishing
     * underneath it (another cleanup path may own part of the tree). */
-  private def delete(p: Path): Unit = {
+  private[graft] def delete(p: Path): Unit = {
     try {
       if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
         val s = Files.list(p)

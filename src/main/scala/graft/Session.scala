@@ -110,7 +110,6 @@ object Session {
     // extraOptimizations, not injectOptimizerRule: an injected rule runs
     // in another optimizer batch and would change the plans.
     spark.experimental.extraOptimizations = Seq(graft.plans.BandedIntervalJoinRule)
-    graft.plans.GraftExtensions.register(spark)
     spark
   }
 

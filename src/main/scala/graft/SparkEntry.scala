@@ -428,7 +428,6 @@ object SparkEntry {
 
     // Q33 — token statistics: whitespace + BPE-ish regex token counts.
     "q33_token_stats" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s) // bpeish_count
       val tk = TextFunctions.tokens(col("text"))
       Tables.documents(s, d).select(col("doc_id"),
         size(tk).as("n_ws"),
@@ -653,7 +652,6 @@ object SparkEntry {
     // decode(encode(lat,lon,12)) ≈ identity within 1e-7 ≪ the 1e-4
     // output rounding, so the oracle is the plain projection.
     "q49_geohash_native" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       Tables.supplier(s, d).select(col("s_suppkey"),
           ((col("s_suppkey") * 7 % 120) - 60 + 0.25).as("lat"),
           ((col("s_suppkey") * 13 % 360) - 180 + 0.5).as("lon"))
@@ -1337,7 +1335,6 @@ object SparkEntry {
     // as q56's first-K IVF centroids; kmeans-trained codebooks are the
     // production path, probed in docs/SCALING.md).
     "q95_pq_adc" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       val e = Tables.embeddings(s, d)
       val cb = Similarity.pqCodebookFirstK(e,
         col("vec_id").cast("long"), col("embedding"), 8, 8, 16)
@@ -1350,7 +1347,6 @@ object SparkEntry {
     // raw-vector fetch + exact distance. Same first-16 codebooks as q95
     // so the whole two-stage pipeline is oracle-shared.
     "q96_pq_rerank" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       val e = Tables.embeddings(s, d)
       val cb = Similarity.pqCodebookFirstK(e,
         col("vec_id").cast("long"), col("embedding"), 8, 8, 16)
@@ -1375,7 +1371,6 @@ object SparkEntry {
     // residual codebooks keep the whole pipeline oracle-shareable
     // (q56/q95 stance).
     "q98_ivfpq_adc" -> ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       val e = Tables.embeddings(s, d)
       Similarity.ivfPqAdcTopK(e, col("vec_id").cast("long"),
         col("embedding"), kCoarse = 8, nprobe = 2, m = 8, dsub = 8,
@@ -1489,7 +1484,6 @@ object SparkEntry {
       // r12: one native pii_scan (linear byte scanners, PiiScanSpec-pinned
       // to the regex chain) replaces six backtracking-regex passes; the
       // DuckDB oracle still states the declarative regex definition
-      graft.plans.GraftExtensions.register(s)
       val p = PiiFunctions.scan(withPii)
       Tables.documents(s, d)
         .select(col("doc_id"),

@@ -75,7 +75,8 @@ object PiiFunctions {
     * `PiiScanSpec`'s differential fuzz against java.util.regex itself;
     * the SQL twins ([[countsSql]]/[[redactSql]]) are unchanged, so the
     * DuckDB oracle still states the declarative regex definition.
-    * Caller must have registered [[graft.plans.GraftExtensions]]. */
+    * [[graft.plans.GraftExtensions]] injects the function into every
+    * session. */
   def scan(text: Column): Column = call_function("pii_scan", text)
 
   /** Text with every PII match replaced by its class tag. */

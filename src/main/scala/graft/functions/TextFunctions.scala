@@ -188,8 +188,8 @@ object TextFunctions {
     * native one-pass [[graft.plans.BpeishCount]] — value-identical to
     * `regexp_count(lower(text), "[a-z]+|[0-9]+|[^a-z0-9 ]")` (spec-
     * pinned), because the alternation regex's backtracking scan WAS the
-    * whole q105 sf10 budget. Callers need [[graft.plans.GraftExtensions]]
-    * registered on the session (operator entry points do so). */
+    * whole q105 sf10 budget. [[graft.plans.GraftExtensions]] injects the
+    * function into every session. */
   def bpeishCount(text: Column): Column =
     call_function("bpeish_count", text)
 

@@ -72,7 +72,6 @@ object TtnEnvelope {
     * null for a null or absent gateway array; parity with
     * [[parseJackson]] is differential-fuzzed in TtnFastJsonSpec. */
   def parseBest(lines: DataFrame, lineCol: Column): DataFrame = {
-    graft.plans.GraftExtensions.register(lines.sparkSession)
     val topic = substring_index(lineCol, " ", 1)
     val json = lineCol.substr(length(topic) + 2, length(lineCol))
     lines.select(

@@ -219,7 +219,6 @@ object CorpusFilter {
     * kept below as the spec's equivalence baseline.) Documents shorter
     * than two tokens report `top_bigram_frac` 0.0. */
   def repetitionProfile(df: DataFrame, id: Column, text: Column): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     df.select(id.as("doc_id"),
         call_function("repetition_stats", text).as("rs"))
       .select(col("doc_id"), col("rs.n_tok").as("n_tok"),

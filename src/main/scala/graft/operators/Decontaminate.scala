@@ -32,7 +32,6 @@ object Decontaminate {
     * states, so engine/oracle equivalence is by construction. */
   def overlap(df: DataFrame, id: Column, text: Column,
               isBenchmark: Column, n: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     val grams = df.select(
         id.as("doc_id"), isBenchmark.as("is_bench"),
         explode(call_function("ngram_shingles", text, lit(n))).as("g"))
@@ -72,7 +71,6 @@ object Decontaminate {
   def embedOverlap(emb: DataFrame, id: Column, vec: Column,
                    isBenchmark: Column, threshold: Double,
                    maxBenchBroadcast: Long = 2000000L): DataFrame = {
-    graft.plans.GraftExtensions.register(emb.sparkSession) // vec_dot
     val base = baseFrame(emb, id, vec, isBenchmark)
     // planning statistic (bounded: one aggregate row), same contract as
     // cosineNearDupPairsLshAuto's corpus count
@@ -125,7 +123,6 @@ object Decontaminate {
                       isBenchmark: Column, threshold: Double,
                       targetRecall: Double = 0.9,
                       bucketCap: Int = 10000): DataFrame = {
-    graft.plans.GraftExtensions.register(emb.sparkSession)
     embedOverlapLshFromBase(baseFrame(emb, id, vec, isBenchmark),
       threshold, targetRecall, bucketCap)
   }

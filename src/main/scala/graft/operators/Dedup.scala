@@ -51,23 +51,21 @@ object Dedup {
     * single widest cost in every shingle pipeline (30.8 s of the q26
     * sf10 budget, docs/SCALING.md r9). Semantics pinned equal to the old
     * chain (and the DuckDB oracle twin) by ShinglePairSpec. */
-  private def shingleCol(df: DataFrame, text: Column, n: Int): Column = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
+  private def shingleCol(text: Column, n: Int): Column =
     call_function("ngram_shingles", text, lit(n))
-  }
 
   /** One row per document with its DISTINCT shingle array — a narrow
     * scan projection, no shuffle (ngram_shingles already dedups). */
   private def shingleSets(df: DataFrame, id: Column, text: Column,
                           n: Int): DataFrame =
-    df.select(id.as("id"), shingleCol(df, text, n).as("hs"))
+    df.select(id.as("id"), shingleCol(text, n).as("hs"))
 
   /** One (id, shingle) row per distinct shingle — the inverted-index
     * view. Explodes the (native, single-expression) shingle column
     * directly inside the Generate node. */
   private def shingleRows(df: DataFrame, id: Column, text: Column,
                           n: Int): DataFrame =
-    df.select(id.as("id"), explode(shingleCol(df, text, n)).as("s"))
+    df.select(id.as("id"), explode(shingleCol(text, n)).as("s"))
 
   /** Exact Jaccard over a (d1, d2) candidate pair set: aggregate each
     * document's FULL (already-distinct) shingle set into ONE array row,
@@ -223,7 +221,7 @@ object Dedup {
         // InferFiltersFromGenerate's size(hs)>0 filter lands on the
         // ATTRIBUTE — the r9 sibling-size pathology (24.4 s vs 0.55 s at
         // sf0.1) cannot reappear. Spec-pinned by DedupSpec + the oracle.
-        val shP = df.select(id.as("id"), shingleCol(df, text, n).as("hs"))
+        val shP = df.select(id.as("id"), shingleCol(text, n).as("hs"))
           .select(col("id"), col("hs"), packExpr.as("p"))
           .select(col("p"), explode(col("hs")).as("s"))
         val posting = shP.groupBy(col("s"))
@@ -289,7 +287,7 @@ object Dedup {
           .select(col("d1"), col("d2"))
         val vSets = df.select(id.as("id"), text.as("__txt"))
           .join(oc.select(col("id")), Seq("id"), "left_semi")
-          .select(col("id"), shingleCol(df, col("__txt"), n).as("hs"))
+          .select(col("id"), shingleCol(col("__txt"), n).as("hs"))
         exact.unionByName(verifyJaccard(maybe, vSets, threshold))
     }
   }

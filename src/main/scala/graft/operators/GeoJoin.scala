@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions
-import graft.plans.GraftExtensions
 
 /** Geohash-cell blocked radius join — SURVEY §2.6 J6 (reference:
   * `lib/MyGPS.py:320-373` FindNeighbours, default area 5 km, and the
@@ -104,7 +103,6 @@ object GeoJoin {
   def pairsWithinRadius(points: DataFrame, key: Column, lat: Column,
                         lon: Column, radiusM: Double,
                         maxAbsLat: Double = 66.0): DataFrame = {
-    GraftExtensions.register(points.sparkSession)
     val reach = new CellReach(radiusM, maxAbsLat)
     val base = points.select(key.as("k"), lat.as("la"), lon.as("lo"))
     // Probe side: every cell within reach; the build side carries a

@@ -71,11 +71,8 @@ object Grubbs {
     * instead of a typed `Aggregator` whose `List[Double]` buffer paid a
     * boxed encoder round trip per partial/merge hand-off. Output struct
     * field names are unchanged (lo/hi/nKept/nRemoved). */
-  def grubbs(value: Column, alpha: Double = 0.05, minN: Int = 15): Column = {
-    graft.plans.GraftExtensions.register(
-      org.apache.spark.sql.SparkSession.active)
+  def grubbs(value: Column, alpha: Double = 0.05, minN: Int = 15): Column =
     call_function("grubbs_agg", value, lit(alpha), lit(minN))
-  }
 
   /** Per-key Grubbs envelope + invalidation flags (the reference's
     * `UPDATE … SET _valid=0 WHERE v < lo OR v > hi` step): returns the

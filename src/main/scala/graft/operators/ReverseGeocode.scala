@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions
-import graft.plans.GraftExtensions
 
 /** Offline reverse geocoding — the in-sandbox twin of the reference's
   * Nominatim lookup on kit relocation (`MyDatacollector/MyDatacollector.py:
@@ -43,7 +42,6 @@ object ReverseGeocode {
                           lon: Column, places: DataFrame, placeKey: Column,
                           placeLat: Column, placeLon: Column, radiusM: Double,
                           maxAbsLat: Double = 66.0): DataFrame = {
-    GraftExtensions.register(points.sparkSession)
     val reach = new GeoJoin.CellReach(radiusM, maxAbsLat)
     val base = points.select(key.as("k"), lat.as("la"), lon.as("lo"))
     // Probe side: every cell within reach — the GeoJoin.pairsWithinRadius

@@ -33,7 +33,6 @@ object SeqPack {
   def pack(df: DataFrame, id: Column, text: Column,
            seqLen: Int, nShards: Int): DataFrame = {
     require(seqLen > 0 && nShards > 0, s"seqLen=$seqLen nShards=$nShards")
-    graft.plans.GraftExtensions.register(df.sparkSession) // bpeish_count
     val shard = pmod(
       TextFunctions.hash32(concat(lit("shard:"), id.cast("string"))),
       lit(nShards.toLong))

@@ -28,14 +28,10 @@ object Similarity {
   /** exact dot(a, b) with per-element double cast, left-to-right fold —
     * the native codegen'd [[graft.plans.DotProduct]] (IEEE-identical to
     * the `aggregate(zip_with(...))` HOF it replaced; the interpreted
-    * per-element lambdas cost ~4× on the pair-join benches). Callers
-    * need [[graft.plans.GraftExtensions]] registered on the session;
-    * every public operator in this object does so on entry. */
+    * per-element lambdas cost ~4× on the pair-join benches), resolved by
+    * name from the functions [[graft.plans.GraftExtensions]] injects into
+    * every session. */
   def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-
-  /** vec_dot lives in the session function registry (idempotent). */
-  private def ensureRegistered(df: DataFrame): Unit =
-    graft.plans.GraftExtensions.register(df.sparkSession)
 
   def norm2(a: Column): Column = dot(a, a)
 
@@ -77,7 +73,6 @@ object Similarity {
     * norm recompute per pair tripled the bench cost). */
   def knnBruteForce(emb: DataFrame, id: Column, vec: Column,
                     nQueries: Int, k: Int): DataFrame = {
-    ensureRegistered(emb)
     val base = emb.select(id.as("id"), vec.as("v"), norm2(vec).as("n2"))
     val q = base.where(col("id") < nQueries)
       .select(col("id").as("q_id"), col("v").as("q_v"), col("n2").as("q_n2"))
@@ -106,7 +101,6 @@ object Similarity {
   def cosineNearDupPairs(emb: DataFrame, id: Column, vec: Column,
                          threshold: Double,
                          maxExactRows: Long = 65536): DataFrame = {
-    ensureRegistered(emb)
     val base = emb.select(id.as("id"), vec.as("v"))
     val n = StatsCatalog.count(base)
     require(n <= maxExactRows,
@@ -130,7 +124,6 @@ object Similarity {
   def cosineNearDupPairsBlocked(emb: DataFrame, block: Column, id: Column,
                                 vec: Column, threshold: Double,
                                 maxBlockRows: Long = 65536): DataFrame = {
-    ensureRegistered(emb)
     val base = emb.select(block.as("label"), id.as("id"), vec.as("v"),
       norm2(vec).as("n2"))
     val biggest = StatsCatalog.collect(base.groupBy(col("label"))
@@ -181,7 +174,6 @@ object Similarity {
   def cosineNearDupPairsLsh(emb: DataFrame, id: Column, vec: Column,
                             threshold: Double, planesPerBand: Int,
                             bands: Int, bucketCap: Int = 1000): DataFrame = {
-    ensureRegistered(emb)
     val base = emb.select(id.cast("long").as("id"), vec.as("v"),
       norm2(vec).as("n2"))
     val planes = collectPlanes(base, planesPerBand * bands)
@@ -369,7 +361,6 @@ object Similarity {
     * vectors on every one of the n×P fan-out rows. */
   def lshBuckets(emb: DataFrame, id: Column, vec: Column,
                  planes: Int): DataFrame = {
-    ensureRegistered(emb)
     val base = emb.select(id.as("id"), vec.as("v"))
     val pl = collectPlanes(base, planes)
     base.select(col("id"),
@@ -408,7 +399,6 @@ object Similarity {
     * list assigns no rows, as the join form's empty inner join did. */
   def ivfAssign(emb: DataFrame, id: Column, vec: Column,
                 cents: Seq[(Int, Seq[Double])]): DataFrame = {
-    ensureRegistered(emb)
     val base = emb.select(id.as("id"), vec.as("v"), norm2(vec).as("n2"))
     if (cents.isEmpty)
       return base.withColumn("cell", lit(null).cast("long")).where(lit(false))
@@ -449,7 +439,6 @@ object Similarity {
     */
   def kmeansCentroids(emb: DataFrame, id: Column, vec: Column,
                       k: Int, iters: Int): Seq[(Int, Seq[Double])] = {
-    ensureRegistered(emb)
     val spark = emb.sparkSession
     import spark.implicits._
     val base = emb.select(id.as("id"),
@@ -522,7 +511,6 @@ object Similarity {
   def annIvfWith(emb: DataFrame, id: Column, vec: Column,
                  cents: Seq[(Int, Seq[Double])], nprobe: Int,
                  nQueries: Int, k: Int): DataFrame = {
-    ensureRegistered(emb)
     val cdf = broadcast(centroidFrame(emb.sparkSession, cents))
     val corpus = ivfAssign(emb, id, vec, cents)
     val q = rankPerQuery(corpus.where(col("id") < nQueries).join(cdf)
@@ -566,7 +554,6 @@ object Similarity {
   def annLshBanded(emb: DataFrame, id: Column, vec: Column,
                    planesPerBand: Int, bands: Int, nQueries: Int,
                    k: Int): DataFrame = {
-    ensureRegistered(emb)
     val base = emb.select(id.as("id"), vec.as("v"), norm2(vec).as("n2"))
     // (id, band) -> bucket code within that band; map-only srp_codes
     // (r13) — same values as the broadcast-plane join + bit-sum form,
@@ -617,7 +604,6 @@ object Similarity {
     * Same output shape as [[knnBruteForce]]; recall < 1 by design. */
   def annLsh(emb: DataFrame, id: Column, vec: Column,
              planes: Int, nQueries: Int, k: Int): DataFrame = {
-    ensureRegistered(emb)
     val base = emb.select(id.as("id"), vec.as("v"), norm2(vec).as("n2"))
     val bucketed = base.join(lshBuckets(emb, id, vec, planes), "id")
     val q = bucketed.where(col("id") < nQueries)
@@ -652,7 +638,6 @@ object Similarity {
     * in Spark expressions so the DuckDB twin is bit-identical. */
   def pqCodebookFirstK(emb: DataFrame, id: Column, vec: Column,
                        m: Int, dsub: Int, ksub: Int): DataFrame = {
-    ensureRegistered(emb)
     pqSlices(emb.where(id < ksub), id, vec, m, dsub)
       .select(col("sub"), col("id").cast("int").as("code"),
         col("sv").as("c_v"), dot(col("sv"), col("sv")).as("cn2"))
@@ -689,7 +674,6 @@ object Similarity {
     * no pairwise stage. */
   def pqEncode(emb: DataFrame, id: Column, vec: Column,
                m: Int, dsub: Int, codebook: DataFrame): DataFrame = {
-    ensureRegistered(emb)
     pqSlices(emb, id, vec, m, dsub)
       .join(broadcast(codebook), Seq("sub"))
       .groupBy(col("id"), col("sub"))
@@ -712,7 +696,6 @@ object Similarity {
   def pqAdcTopK(emb: DataFrame, id: Column, vec: Column,
                 m: Int, dsub: Int, codebook: DataFrame,
                 nQueries: Int, k: Int): DataFrame = {
-    ensureRegistered(emb)
     val enc = pqEncode(emb, id, vec, m, dsub, codebook)
     val lut = pqSlices(emb.where(id < nQueries), id, vec, m, dsub)
       .join(broadcast(codebook), Seq("sub"))
@@ -785,7 +768,6 @@ object Similarity {
                        mkCodebook: DataFrame => DataFrame,
                        nprobe: Int, m: Int, dsub: Int,
                        nQueries: Int, k: Int): DataFrame = {
-    ensureRegistered(emb)
     val cents = centroidFrame(emb.sparkSession, coarse) // (c_id, c_v, cn2)
     val cells = ivfAssign(emb, id, vec, coarse) // (id, v, n2, cell)
     val resid = cells.join(broadcast(cents), col("cell") === col("c_id"))
@@ -840,7 +822,6 @@ object Similarity {
   def pqAdcRerankTopK(emb: DataFrame, id: Column, vec: Column,
                       m: Int, dsub: Int, codebook: DataFrame,
                       nQueries: Int, k: Int, rerank: Int): DataFrame = {
-    ensureRegistered(emb)
     val shortlist = pqAdcTopK(emb, id, vec, m, dsub, codebook,
         nQueries, k * rerank)
       .select(col("q_id"), col("n_id"))

@@ -31,7 +31,6 @@ object TokenizerOps {
     * deterministic in both engines. */
   def topMergePairs(df: DataFrame, text: Column, k: Int): DataFrame = {
     require(k > 0, s"k=$k")
-    graft.plans.GraftExtensions.register(df.sparkSession)
     df.select(explode(call_function("ngram_list", text, lit(2))).as("pair"))
       .groupBy(col("pair"))
       .agg(count(lit(1)).as("n"))
@@ -81,7 +80,6 @@ object TokenizerOps {
   def trainMerges(df: DataFrame, text: Column, k: Int): DataFrame = {
     require(k > 0, s"k=$k")
     val spark = df.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     // The canonical layout IS the tokens() contract (lowercase, space-
     // squeeze, space-split — merged symbols are single '_'-joined
     // tokens), so the native one-pass `ngram_list` scan extracts each

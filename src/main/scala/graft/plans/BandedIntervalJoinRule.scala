@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Scope guards: inner joins, positive integer literal tolerance, both
   * sides integral (the archive's epoch-micros columns) and non-negative
   * domains (IntegralDivide truncates toward zero, which equals floor
-  * there). Registered via [[GraftExtensions]] or
+  * there). [[graft.Session.build]] installs it through
   * `spark.experimental.extraOptimizations`.
   */
 object BandedIntervalJoinRule extends Rule[LogicalPlan] {

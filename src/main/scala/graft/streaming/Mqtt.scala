@@ -256,10 +256,13 @@ object Mqtt {
     * `topic payload` line to a localhost line server — the feed for
     * [[Transport.Socket]]. Lines received before the socket source
     * connects are buffered, so publish/subscribe ordering races with
-    * Spark's query start are benign.
+    * Spark's query start are benign. The subscriber thread appends each
+    * line to that history; writers hold its lock only to read a line,
+    * never while writing to a socket.
     *
     * Reconnect contract (ADVICE r12): the line server accepts in a LOOP
-    * and every connection replays the full line history from the start —
+    * and serves every connection on a writer thread of its own, which
+    * replays the full line history from the start —
     * a socket-source reconnect (query restart, task retry) therefore
     * re-reads the whole feed instead of silently losing everything after
     * the first connection (and broken pipes are detected via
@@ -274,7 +277,6 @@ object Mqtt {
     private val lineServer = new ServerSocket(0, 1, InetAddress.getLoopbackAddress)
     val linePort: Int = lineServer.getLocalPort
     val lineHost: String = InetAddress.getLoopbackAddress.getHostAddress
-    private val queue = new LinkedBlockingQueue[String]()
     private val history = new java.util.ArrayList[String]()
     private val subscribed = new CountDownLatch(1)
     @volatile private var open = true
@@ -282,44 +284,46 @@ object Mqtt {
     private val sock = new Socket(brokerHost, brokerPort)
 
     subscribe("mqtt-bridge-sub", sock, clientId, topicFilter, subscribed, open) {
-      (topic, payload) => queue.put(s"$topic $payload")
+      (topic, payload) => history.synchronized {
+        history.add(s"$topic $payload"); history.notifyAll()
+      }
     }
 
-    // queue → history pump: the reader thread never blocks on a client
-    daemon("mqtt-bridge-pump") {
-      try {
-        while (open) {
-          val line = queue.take()
-          history.synchronized { history.add(line); history.notifyAll() }
-        }
-      } catch { case _: Exception => () }
-    }
-
+    // one writer per connection: a socket source that hung up leaves its
+    // writer waiting for the next line, which must not block the reconnect
     daemon("mqtt-bridge-lines") {
       while (open) {
         try {
           val client = lineServer.accept() // a Spark socket source (re)connect
-          val w = new java.io.PrintWriter(
-            new java.io.OutputStreamWriter(client.getOutputStream, UTF_8), false)
-          var idx = 0
-          var live = true
-          while (open && live) {
-            val line = history.synchronized {
-              while (open && history.size() <= idx) history.wait(500)
-              if (history.size() > idx) history.get(idx) else null
-            }
-            if (line != null) {
-              idx += 1
-              w.println(line)
-              w.flush()
-              // println/flush swallow IOExceptions — fail the CONNECTION
-              // loudly and fall back to accept() for the reconnect
-              if (w.checkError()) live = false
-            }
-          }
-          scala.util.Try(client.close())
+          daemon("mqtt-bridge-writer")(writeHistory(client))
         } catch { case _: Exception => () } // server closed / accept raced
       }
+    }
+
+    /** Writes every line from the first on to `client`, until the bridge
+      * closes or a write fails (the client hung up). */
+    private def writeHistory(client: Socket): Unit = {
+      try {
+        val w = new java.io.PrintWriter(
+          new java.io.OutputStreamWriter(client.getOutputStream, UTF_8), false)
+        var idx = 0
+        var live = true
+        while (open && live) {
+          val line = history.synchronized {
+            while (open && history.size() <= idx) history.wait(500)
+            if (history.size() > idx) history.get(idx) else null
+          }
+          if (line != null) {
+            idx += 1
+            w.println(line)
+            w.flush()
+            // println/flush swallow IOExceptions: checkError ends this
+            // connection's writer
+            if (w.checkError()) live = false
+          }
+        }
+      } catch { case _: Exception => () }
+      finally scala.util.Try(client.close())
     }
 
     /** Blocks until the broker granted the subscription — publish after

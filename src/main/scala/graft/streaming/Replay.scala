@@ -37,14 +37,6 @@ object Replay {
   private lazy val tmpRoot: java.nio.file.Path =
     graft.Scratch.tempDir("graft_replay_session_")
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-      val s = Files.list(p)
-      try s.forEach(c => deleteRecursively(c)) finally s.close()
-    }
-    Files.deleteIfExists(p)
-  }
-
   /** The volume-derived state-partition count for the STATEFUL replays
     * (r13 opt round, guide §2.2/§6): every micro-batch commits one state
     * file per shuffle partition per stateful operator, so with the
@@ -139,7 +131,7 @@ object Replay {
     val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
     // Fresh run: clear the previous run's dirs (also resets the stream
     // checkpoint — reusing it would make the source skip the input files).
-    Seq("archive", "in", "ckpt").foreach(n => deleteRecursively(tmpRoot.resolve(n)))
+    Seq("archive", "in", "ckpt").foreach(n => graft.Scratch.delete(tmpRoot.resolve(n)))
     val archiveDir = tmpRoot.resolve("archive").toString + "/events"
     // The file source wants a directory; stage the dump as TWO links so
     // two micro-batches replay the same telegrams — the archive upsert
@@ -186,7 +178,7 @@ object Replay {
   private def stageReplayFiles(prefix: String, corpus: DataFrame,
       files: Seq[(String, Column, Long)]): java.nio.file.Path = {
     Seq(s"${prefix}_in", s"${prefix}_ckpt", s"${prefix}_out", s"${prefix}_stage")
-      .foreach(n => deleteRecursively(tmpRoot.resolve(n)))
+      .foreach(n => graft.Scratch.delete(tmpRoot.resolve(n)))
     val inDir = Files.createDirectories(tmpRoot.resolve(s"${prefix}_in"))
     // The N staged writes are independent tiny jobs over the persisted
     // corpus — submit them concurrently so each job's tail back-fills

@@ -10,7 +10,6 @@ class GeohashExpressionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("native expressions register and run inside whole-stage codegen") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq((57.64911, 10.40744), (51.42083, 6.13541), (-33.8, 151.2))
       .toDF("lat", "lon")
@@ -33,7 +32,6 @@ class GeohashExpressionsSpec extends AnyFunSuite {
   }
 
   test("expressions compile inside whole-stage codegen (non-local source)") {
-    GraftExtensions.register(spark)
     // a range source can't be constant-folded into a LocalRelation, so
     // the projection must actually pass through codegen
     val df = spark.range(100).selectExpr(
@@ -51,12 +49,26 @@ class GeohashExpressionsSpec extends AnyFunSuite {
   }
 
   test("null propagation through the codegen path") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val out = Seq((Some(51.0), Some(6.0)), (None, Some(6.0)))
       .toDF("lat", "lon")
       .selectExpr("geohash_encode(lat, lon, 8) AS gh").collect()
     assert(out(0).getString(0) != null)
     assert(out(1).isNullAt(0))
+  }
+
+  test("a new session resolves the native functions without registering them") {
+    // a fresh session starts from the builtin registry plus whatever the
+    // extension providers inject; nothing registers functions by hand
+    val fresh = spark.newSession()
+    val df = fresh.range(1).selectExpr(
+      "vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d",
+      "geohash_encode(57.64911D, 10.40744D, 11) AS gh",
+      "ttn_parse_best('{}') AS t")
+    val row = df.collect().head
+    assert(row.getDouble(0) == 11.0)
+    assert(row.getString(1) == "u4pruydqqvj")
+    assert(df.schema("t").dataType.isInstanceOf[
+      org.apache.spark.sql.types.StructType])
   }
 }

@@ -12,8 +12,6 @@ import spark.implicits._
   * candidate-pair SET on randomized posting lists at every cut, so the
   * de-boxing cannot change what q91/q102 verify. */
 class PostingFlatSpec extends AnyFunSuite {
-  graft.plans.GraftExtensions.register(spark)
-
   private val w = 3 // id + 2 sketch words, the production nWords=2 shape
 
   /** (band, bucket, id, sk) rows — several buckets, skewed sizes, ids

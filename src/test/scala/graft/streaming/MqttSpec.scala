@@ -35,6 +35,36 @@ class MqttSpec extends AnyFunSuite {
     assert(topicMatches("exact/topic", "exact/topic"))
   }
 
+  test("subscriber bridge: each line-server connection replays every line " +
+      "in publish order") {
+    val broker = new Mqtt.MqttBroker()
+    val bridge = new Mqtt.MqttSubscriberBridge(broker.host, broker.port, "kits/#")
+    try {
+      bridge.awaitSubscribed()
+      val n = 50
+      val sent = (0 until n).map(i => (s"kits/k${i % 3}", s"""{"i":$i}"""))
+      val pub = new Mqtt.MqttPublisher(broker.host, broker.port)
+      sent.foreach { case (topic, json) => pub.publish(topic, json) }
+      pub.close()
+      // one socket-source (re)connect: read n lines, then hang up
+      def connectAndRead(): Seq[String] = {
+        val s = new java.net.Socket(bridge.lineHost, bridge.linePort)
+        try {
+          s.setSoTimeout(20000)
+          val r = new java.io.BufferedReader(new java.io.InputStreamReader(
+            s.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
+          Seq.fill(n)(r.readLine())
+        } finally s.close()
+      }
+      val expected = sent.map { case (topic, json) => s"$topic $json" }
+      assert(connectAndRead() == expected)
+      assert(connectAndRead() == expected)
+    } finally {
+      bridge.close()
+      broker.close()
+    }
+  }
+
   test("live MQTT subscribe feeds the parse pipeline; result == batch parse") {
     val events = graft.Tables.events(spark, "/root/testdata/sf0.001")
     val fixture = graft.SparkEntry.ttnFixtureLines(events)

@@ -7,10 +7,14 @@
 Run from the root of the working tree. The parent commit is exported with
 ``git archive`` into ``--parent-dir`` (default: a new directory under the
 system temp dir; an export of the same commit is reused, with its
-``.bench_build``). Pair i runs ``python3 perfbench/run.py --workload <name>
---seed S+i --seconds 20 --trace 0`` once in the parent export and once in
-the working tree, one run at a time; the parent goes first in even pairs
-and second in odd ones. Every result line is appended to ``--out`` as
+``.bench_build``). The change side is run from a snapshot too, so both
+sides run from an export rather than one from the working tree: the
+working tree's tracked files, with their uncommitted edits, and its
+untracked files that git does not ignore are copied into the sibling
+directory ``<parent-dir>-change``, which keeps its own ``.bench_build``
+between invocations. Pair i runs ``python3 perfbench/run.py --workload
+<name> --seed S+i --seconds 20 --trace 0`` once in each export, one run at
+a time; the parent goes first in even pairs and second in odd ones. Every result line is appended to ``--out`` as
 ``{"pair", "seed", "side", "result"}``. At the end it prints, per
 end-to-end metric of ``BENCHMARK.json``, each side's median and quartiles,
 the change against the parent, the parent's IQR/median and the pairs the
@@ -29,6 +33,7 @@ are only read.
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -204,6 +209,39 @@ def export_parent(ref, parent_dir):
     return sha
 
 
+def snapshot_tree(root, dest):
+    """Copies the tracked files of the working tree at `root`, with their
+    uncommitted edits, and its untracked files that git does not ignore
+    into `dest`, with their modes and times. The files an earlier
+    snapshot copied are removed first; everything else in `dest` (its
+    ``.bench_build``, sbt's ``target`` dirs) is kept. Returns the number
+    of files in the snapshot."""
+    listing = subprocess.run(
+        ["git", "ls-files", "-z", "--cached", "--others", "--exclude-standard"],
+        cwd=root, check=True, capture_output=True).stdout.decode()
+    # a tracked file deleted in the working tree is left out
+    files = sorted({p for p in listing.split("\0")
+                    if p and os.path.lexists(os.path.join(root, p))})
+    manifest = os.path.join(dest, ".abpairs-files")
+    if os.path.exists(manifest):
+        with open(manifest) as f:
+            old = set(f.read().split("\0")) - {""}
+    elif os.path.exists(dest) and os.listdir(dest):
+        sys.exit(f"{dest} is not empty and holds no snapshot of a working tree")
+    else:
+        old = set()
+    for p in old:
+        if os.path.lexists(os.path.join(dest, p)):
+            os.remove(os.path.join(dest, p))
+    for p in files:
+        dst = os.path.join(dest, p)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        shutil.copy2(os.path.join(root, p), dst, follow_symlinks=False)
+    with open(manifest, "w") as f:
+        f.write("\0".join(files))
+    return len(files)
+
+
 def run_once(side_root, workload, seed, log):
     env = dict(os.environ)
     env.pop("CARGO_TARGET_DIR", None)  # each side builds into its own .bench_build
@@ -232,17 +270,19 @@ def main():
         better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
     parent_dir = args.parent_dir or tempfile.mkdtemp(prefix="abpairs-parent-")
     sha = export_parent(args.parent, parent_dir)
+    change_dir = os.path.normpath(parent_dir) + "-change"
+    n_files = snapshot_tree(ROOT, change_dir)
     out = args.out or f"abpairs-{args.workload}-s{args.seed_from}.jsonl"
     log_path = out + ".log"
-    print(f"parent {sha[:12]} in {parent_dir}; results -> {out}, run logs -> {log_path}",
-          file=sys.stderr, flush=True)
+    print(f"parent {sha[:12]} in {parent_dir}; working tree ({n_files} files) in {change_dir}; "
+          f"results -> {out}, run logs -> {log_path}", file=sys.stderr, flush=True)
     records, bad = [], 0
     with open(out, "a") as res, open(log_path, "a") as log:
         for i in range(args.pairs):
             seed = args.seed_from + i
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for side in order:
-                root = parent_dir if side == "parent" else ROOT
+                root = parent_dir if side == "parent" else change_dir
                 result = run_once(root, args.workload, seed, log)
                 if result is None or result.get("correct") is not True:
                     bad += 1

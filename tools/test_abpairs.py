@@ -4,6 +4,7 @@
 """
 import json
 import os
+import subprocess
 import sys
 import tempfile
 import unittest
@@ -137,6 +138,65 @@ class ReadsTest(unittest.TestCase):
         self.assertAlmostEqual(s["change"]["read_wait_s"], 0.02)
         self.assertIn("0.11 ", abpairs.format_reads(s))
         self.assertIsNone(abpairs.summarize_reads(records[-1:]))
+
+
+class SnapshotTest(unittest.TestCase):
+    def git(self, repo, *args):
+        subprocess.run(["git", "-c", "user.name=t", "-c", "user.email=t@example.com", *args],
+                       cwd=repo, check=True, capture_output=True)
+
+    def write(self, path, text):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "w") as f:
+            f.write(text)
+
+    def read(self, path):
+        with open(path) as f:
+            return f.read()
+
+    def test_tracked_edits_and_untracked_files_without_ignored_ones(self):
+        with tempfile.TemporaryDirectory() as tmp:
+            repo, dest = os.path.join(tmp, "repo"), os.path.join(tmp, "snap")
+            os.makedirs(repo)
+            self.git(repo, "init", "-q")
+            self.write(os.path.join(repo, ".gitignore"), "target/\n")
+            self.write(os.path.join(repo, "src", "a.scala"), "committed a")
+            self.write(os.path.join(repo, "src", "same.scala"), "committed same")
+            self.write(os.path.join(repo, "gone.txt"), "committed gone")
+            self.git(repo, "add", "-A")
+            self.git(repo, "commit", "-q", "-m", "c")
+            self.write(os.path.join(repo, "src", "a.scala"), "edited a")  # uncommitted edit
+            os.remove(os.path.join(repo, "gone.txt"))  # deleted, not committed
+            self.write(os.path.join(repo, "res", "new.txt"), "untracked")
+            self.write(os.path.join(repo, "target", "out.class"), "ignored")
+
+            self.assertEqual(abpairs.snapshot_tree(repo, dest), 4)
+            self.assertEqual(self.read(os.path.join(dest, "src", "a.scala")), "edited a")
+            self.assertEqual(self.read(os.path.join(dest, "src", "same.scala")), "committed same")
+            self.assertEqual(self.read(os.path.join(dest, "res", "new.txt")), "untracked")
+            self.assertTrue(os.path.exists(os.path.join(dest, ".gitignore")))
+            self.assertFalse(os.path.exists(os.path.join(dest, "gone.txt")))
+            self.assertFalse(os.path.exists(os.path.join(dest, "target")))
+
+            # a second snapshot refreshes the files and keeps the side's build
+            self.write(os.path.join(dest, ".bench_build", "build.stamp"), "kept")
+            os.remove(os.path.join(repo, "res", "new.txt"))
+            self.write(os.path.join(repo, "src", "a.scala"), "edited again")
+            self.assertEqual(abpairs.snapshot_tree(repo, dest), 3)
+            self.assertEqual(self.read(os.path.join(dest, "src", "a.scala")), "edited again")
+            self.assertFalse(os.path.exists(os.path.join(dest, "res", "new.txt")))
+            self.assertEqual(self.read(os.path.join(dest, ".bench_build", "build.stamp")), "kept")
+            self.assertEqual(self.read(os.path.join(dest, "src", "same.scala")), "committed same")
+
+    def test_refuses_a_directory_it_did_not_write(self):
+        with tempfile.TemporaryDirectory() as tmp:
+            repo, dest = os.path.join(tmp, "repo"), os.path.join(tmp, "other")
+            os.makedirs(repo)
+            self.git(repo, "init", "-q")
+            self.write(os.path.join(dest, "keep.txt"), "not a snapshot")
+            with self.assertRaises(SystemExit):
+                abpairs.snapshot_tree(repo, dest)
+            self.assertEqual(self.read(os.path.join(dest, "keep.txt")), "not a snapshot")
 
 
 if __name__ == "__main__":
