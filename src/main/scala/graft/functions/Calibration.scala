@@ -54,7 +54,6 @@ object Calibration {
     when(f.between(0.0, 1.0), pm * f)
   }
   def joostPm25(pm: Column, rh: Column): Column = joostRh(pm, rh, 3.9, -0.409)
-  def joostPm10(pm: Column, rh: Column): Column = joostRh(pm, rh, 4.31, -0.47)
 
   /** RIVM SDS011 humidity correction (`ChartsPM.pl:344-360`). */
   def rivmRhCorrection(pm: Column, rh0: Column): Column = {
@@ -71,10 +70,6 @@ object Calibration {
   /** µg/m³ → ppb for a gas at temp °C and pressure mBar (A₀=1013.25). */
   def ugm3ToPpb(v: Column, gas: String, tempC: Column, mBar: Column): Column =
     v * ((lit(273.15) + tempC) / 12.187) * (mBar / 1013.25) / Gmol(gas)
-
-  /** ppb → µg/m³ inverse. */
-  def ppbToUgm3(v: Column, gas: String, tempC: Column, mBar: Column): Column =
-    v * Gmol(gas) / ((lit(273.15) + tempC) / 12.187) / (mBar / 1013.25)
 
   /** Pa → hPa ([0, 0.01] Taylor, `lib/MyARCHIVE.py:277-283`). */
   def paToHPa(v: Column): Column = v * 0.01

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Calibration
+
 /** Sensors.Community forwarding projection — SURVEY §2.1 K2 (the
   * semantic half; transport is the pluggable side of
   * [[graft.streaming.Forwarding]]).
@@ -119,20 +121,10 @@ object Community {
         .otherwise(col("a0") + col("a1") * col("__v")))
       .otherwise(col("__v"))
     val apiValue = when(col("value_type") === "pressure",
-        (col("__v") * 100).cast("long").cast("double")) // int(v*100), hPa→Pa
+        Calibration.hPaToPa(col("__v")).cast("long").cast("double")) // int(v*100)
       .otherwise(round(calibrated, 2))
     joined.select(Seq(col("kit"), col("pin"), col("value_type"),
       apiValue.as("value")) ++ extra.map(e => col(e._1)): _*)
   }
 
-  /** Group API rows into one posting per (kit, pin) — the X-Pin POST
-    * body shape: deterministic JSON `{"software_version":…,
-    * "sensordatavalues":[{"value_type":…,"value":…},…]}` with fields
-    * sorted by name (q57's order-deterministic JSON idiom). */
-  def postings(rows: DataFrame, softwareVersion: String): DataFrame =
-    rows.groupBy(col("kit"), col("pin"))
-      .agg(to_json(struct(
-        lit(softwareVersion).as("software_version"),
-        array_sort(collect_list(struct(col("value_type"), col("value"))))
-          .as("sensordatavalues"))).as("post_json"))
 }

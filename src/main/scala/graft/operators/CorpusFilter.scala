@@ -215,8 +215,8 @@ object CorpusFilter {
     * at any corpus size. (The first cut exploded tokens−1 bigram rows
     * per document through two shuffled hash aggregates just to take a
     * per-document max — a corpus-sized shuffle for a row-local
-    * statistic; 2.0 s → map-only at sf0.1, and the declarative twin is
-    * kept below as the spec's equivalence baseline.) Documents shorter
+    * statistic; 2.0 s → map-only at sf0.1; the declarative chain is
+    * `RepetitionStatsSpec`'s equivalence baseline.) Documents shorter
     * than two tokens report `top_bigram_frac` 0.0. */
   def repetitionProfile(df: DataFrame, id: Column, text: Column): DataFrame = {
     df.select(id.as("doc_id"),
@@ -227,33 +227,6 @@ object CorpusFilter {
           4).as("dup_frac"),
         when(col("rs.n_tok") >= 2,
           round(col("rs.top_bigram") / (col("rs.n_tok") - 1).cast("double"), 4))
-          .otherwise(lit(0.0)).as("top_bigram_frac"))
-  }
-
-  /** The declarative explode-and-aggregate form of [[repetitionProfile]]
-    * — the semantic spec the native scan is property-tested against
-    * (`RepetitionStatsSpec`); not a production path. */
-  private[graft] def repetitionProfileDeclarative(
-      df: DataFrame, id: Column, text: Column): DataFrame = {
-    val tk = TextFunctions.tokens(text)
-    val bigrams = when(size(col("tk")) >= 2,
-        transform(sequence(lit(0), size(col("tk")) - 2),
-          i => concat_ws(" ", element_at(col("tk"), (i + 1).cast("int")),
-            element_at(col("tk"), (i + 2).cast("int")))))
-      .otherwise(array().cast("array<string>"))
-    df.select(id.as("doc_id"), tk.as("tk"))
-      .select(col("doc_id"), size(col("tk")).cast("long").as("n_tok"),
-        round(lit(1.0) -
-          size(array_distinct(col("tk"))).cast("double") / size(col("tk")),
-          4).as("dup_frac"),
-        explode_outer(bigrams).as("g"))
-      .groupBy(col("doc_id"), col("n_tok"), col("dup_frac"), col("g"))
-      .agg(count(col("g")).as("c")) // count(g): 0 for the null outer row
-      .groupBy(col("doc_id"), col("n_tok"), col("dup_frac"))
-      .agg(max(col("c")).as("top_c"))
-      .select(col("doc_id"), col("n_tok"), col("dup_frac"),
-        when(col("n_tok") >= 2,
-          round(col("top_c") / (col("n_tok") - 1).cast("double"), 4))
           .otherwise(lit(0.0)).as("top_bigram_frac"))
   }
 

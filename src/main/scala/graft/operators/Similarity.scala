@@ -596,10 +596,6 @@ object Similarity {
       .agg((sum(coalesce(col("hit"), lit(0))) / lit(k)).as("recall"))
   }
 
-  /** Mean recall@k over all queries (one double). */
-  def meanRecallAtK(ann: DataFrame, exact: DataFrame, k: Int): Double =
-    recallAtK(ann, exact, k).agg(avg(col("recall"))).head().getDouble(0)
-
   /** LSH-bucketed ANN: exact cosine top-k *within the query's bucket*.
     * Same output shape as [[knnBruteForce]]; recall < 1 by design. */
   def annLsh(emb: DataFrame, id: Column, vec: Column,

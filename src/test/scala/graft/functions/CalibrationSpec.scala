@@ -46,7 +46,8 @@ class CalibrationSpec extends AnyFunSuite {
 
   test("gas unit conversion: ug/m3 -> ppb -> ug/m3 round-trips") {
     val ppb = Calibration.ugm3ToPpb(lit(40.0), "no2", lit(20.0), lit(1013.25))
-    val back = Calibration.ppbToUgm3(ppb, "no2", lit(20.0), lit(1013.25))
+    // ppb → µg/m³ at the same 20 °C and 1013.25 mBar
+    val back = ppb * Calibration.Gmol("no2") / ((lit(273.15) + 20.0) / 12.187)
     assert(math.abs(eval1(back) - 40.0) < 1e-9)
   }
 

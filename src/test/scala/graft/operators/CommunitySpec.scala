@@ -42,18 +42,4 @@ class CommunitySpec extends AnyFunSuite {
     val out = run(Seq(("k", "BME280", "luchtdruk", 1017.369)))
     assert(out == Set(("k", 11, "pressure", 101736.0)))
   }
-
-  test("postings group one JSON body per (kit, pin), fields sorted") {
-    val rows = Community.rows(spark,
-      Seq(("k", "BME280", "temp", 20.0), ("k", "BME280", "rv", 50.0),
-          ("k", "PMS7003", "pm25", 10.0)).toDF("kit", "stype", "field", "v"),
-      col("kit"), col("stype"), col("field"), col("v"))
-    val posts = Community.postings(rows, "graft-0.1")
-      .collect().map(r => (r.getInt(1), r.getString(2))).toMap
-    assert(posts.keySet == Set(11, 1))
-    assert(posts(11).contains("\"software_version\":\"graft-0.1\""))
-    // rv→humidity sorts before temp→temperature inside the pin-11 body
-    assert(posts(11).indexOf("humidity") < posts(11).indexOf("temperature"))
-    assert(posts(1).contains("\"value_type\":\"P2\""))
-  }
 }

@@ -9,6 +9,11 @@ class SimilaritySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** Mean recall@k over all queries (one double). */
+  private def meanRecallAtK(ann: org.apache.spark.sql.DataFrame,
+      exact: org.apache.spark.sql.DataFrame, k: Int): Double =
+    Similarity.recallAtK(ann, exact, k).agg(avg(col("recall"))).head().getDouble(0)
+
   private def emb = Seq(
     (0L, Array(1.0f, 0.0f, 0.0f)),
     (1L, Array(0.0f, 1.0f, 0.0f)),
@@ -154,8 +159,8 @@ class SimilaritySpec extends AnyFunSuite {
     }
     // band 0 of the banded variant uses the same planes as annLsh(2):
     // adding a band can only add candidates, so recall must not drop
-    assert(Similarity.meanRecallAtK(banded, bf, 4) >=
-      Similarity.meanRecallAtK(single, bf, 4))
+    assert(meanRecallAtK(banded, bf, 4) >=
+      meanRecallAtK(single, bf, 4))
   }
 
 
@@ -311,8 +316,8 @@ class SimilaritySpec extends AnyFunSuite {
       4, 32, 3)
     val trained = Similarity.annIvfTrained(data, col("vec_id"),
       col("embedding"), 4, 10, 1, 32, 3)
-    val rStub = Similarity.meanRecallAtK(stub, exact, 3)
-    val rTrained = Similarity.meanRecallAtK(trained, exact, 3)
+    val rStub = meanRecallAtK(stub, exact, 3)
+    val rTrained = meanRecallAtK(trained, exact, 3)
     assert(rTrained >= rStub)
     assert(rTrained == 1.0,
       s"trained IVF must fully recover planted-cluster neighbours, got $rTrained")
@@ -373,13 +378,13 @@ class SimilaritySpec extends AnyFunSuite {
       2, 2, trained, nQueries = 4, k = 7)
     val exact = Similarity.knnBruteForce(data, col("vec_id"), col("embedding"), 4, 7)
     // euclidean ADC vs cosine exact agree on these planted clusters
-    assert(Similarity.meanRecallAtK(adc, exact, 7) >= 0.85,
+    assert(meanRecallAtK(adc, exact, 7) >= 0.85,
       "ADC must recover planted-cluster neighbours")
     // exact rerank of the ADC shortlist can only improve recall
     val rr = Similarity.pqAdcRerankTopK(data, col("vec_id"), col("embedding"),
       2, 2, trained, nQueries = 4, k = 7, rerank = 3)
-    assert(Similarity.meanRecallAtK(rr, exact, 7) >=
-      Similarity.meanRecallAtK(adc, exact, 7),
+    assert(meanRecallAtK(rr, exact, 7) >=
+      meanRecallAtK(adc, exact, 7),
       "rerank must not lose recall vs the raw ADC ranking")
   }
 
@@ -472,7 +477,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("recall@k: exact vs itself = 1; missing queries count as 0") {
     import spark.implicits._
     val bf = Similarity.knnBruteForce(emb, col("vec_id"), col("embedding"), 5, 4)
-    assert(Similarity.meanRecallAtK(bf, bf, 4) == 1.0)
+    assert(meanRecallAtK(bf, bf, 4) == 1.0)
     // ANN that only answered query 0, and only got 2 of its 4 right:
     // the other 4 queries must drag the mean down, not vanish.
     val partial = bf.where(col("q_id") === 0 && col("rank") <= 2)
@@ -480,7 +485,7 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(perQ.size == 5, "every ground-truth query appears")
     assert(perQ(0L) == 0.5 && (1L to 4L).forall(perQ(_) == 0.0))
-    assert(Similarity.meanRecallAtK(partial, bf, 4) == 0.1)
+    assert(meanRecallAtK(partial, bf, 4) == 0.1)
   }
 
   test("exact near-dup guards refuse unscoped quadratics (r13 fence)") {

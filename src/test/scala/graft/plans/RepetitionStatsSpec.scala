@@ -1,9 +1,11 @@
 package graft.plans
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.functions.TextFunctions
 import graft.operators.CorpusFilter
 
 /** Semantics pins for the r10 q106 native: [[RepetitionStats]] (the
@@ -29,13 +31,40 @@ class RepetitionStatsSpec extends AnyFunSuite {
     "unicode café straße Жук café straße Жук tail",
     "x " * 2000 + "tail")
 
-  private def profiles(df: org.apache.spark.sql.DataFrame) = {
+  /** The declarative explode-and-aggregate form of
+    * [[CorpusFilter.repetitionProfile]]: the semantic spec the native scan
+    * is property-tested against. */
+  private def repetitionProfileDeclarative(
+      df: DataFrame, id: Column, text: Column): DataFrame = {
+    val tk = TextFunctions.tokens(text)
+    val bigrams = when(size(col("tk")) >= 2,
+        transform(sequence(lit(0), size(col("tk")) - 2),
+          i => concat_ws(" ", element_at(col("tk"), (i + 1).cast("int")),
+            element_at(col("tk"), (i + 2).cast("int")))))
+      .otherwise(array().cast("array<string>"))
+    df.select(id.as("doc_id"), tk.as("tk"))
+      .select(col("doc_id"), size(col("tk")).cast("long").as("n_tok"),
+        round(lit(1.0) -
+          size(array_distinct(col("tk"))).cast("double") / size(col("tk")),
+          4).as("dup_frac"),
+        explode_outer(bigrams).as("g"))
+      .groupBy(col("doc_id"), col("n_tok"), col("dup_frac"), col("g"))
+      .agg(count(col("g")).as("c")) // count(g): 0 for the null outer row
+      .groupBy(col("doc_id"), col("n_tok"), col("dup_frac"))
+      .agg(max(col("c")).as("top_c"))
+      .select(col("doc_id"), col("n_tok"), col("dup_frac"),
+        when(col("n_tok") >= 2,
+          round(col("top_c") / (col("n_tok") - 1).cast("double"), 4))
+          .otherwise(lit(0.0)).as("top_bigram_frac"))
+  }
+
+  private def profiles(df: DataFrame) = {
     val native = CorpusFilter.repetitionProfile(df, col("id"), col("text"))
-    val spec = CorpusFilter.repetitionProfileDeclarative(df, col("id"), col("text"))
+    val spec = repetitionProfileDeclarative(df, col("id"), col("text"))
     (native, spec)
   }
 
-  private def assertSame(df: org.apache.spark.sql.DataFrame): Unit = {
+  private def assertSame(df: DataFrame): Unit = {
     val (native, spec) = profiles(df)
     val n = native.collect().map(r => r.getLong(0) ->
       ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
